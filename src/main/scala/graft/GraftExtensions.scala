@@ -3,24 +3,29 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, ExpressionInfo, GetJsonObject, Length, Lower, Upper}
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.graftbridge.{DotProduct, JaccardSorted, JaroWinkler, MinHashSignature, NfcNormalize, SquaredL2Distance, StableHash32, WordShingleHashes}
+import graft.functions.KsqlFunctions
+import graft.functions.KsqlFunctions.Fn
 
-/** SparkSessionExtensions entry point: registers graft's native
-  * expressions as SQL functions, so pure-SQL users (spark.sql, JDBC,
-  * ksql-translated text) get the codegen'd hot paths too:
+/** SparkSessionExtensions entry point: registers graft's SQL functions,
+  * so pure-SQL users (spark.sql, JDBC, ksql-translated text) get them
+  * too:
   *
   *   spark.sql.extensions=graft.GraftExtensions       // at session build
   *   GraftExtensions.register(spark)                  // or at runtime
   *
-  * SQL surface: vec_dot(a,b), vec_l2sq(a,b), jaccard_sorted(a,b),
-  * minhash_sig(hashes, k).
+  * SQL surface: the native codegen expressions (vec_dot(a,b),
+  * vec_l2sq(a,b), jaccard_sorted(a,b), minhash_sig(hashes, k), …) under
+  * their own names, and every ksqlDB function of [[KsqlFunctions.table]]
+  * as `ksql_<name>`, plus its bare name where Spark has no function of
+  * that name (Spark's own MASK, SLICE, SPLIT, … keep their meaning).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.definitions.foreach { case (name, info, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
-    }
+    GraftExtensions.registrations.foreach(ext.injectFunction)
     // materialized-view rewrite (§2.15): config-built sessions serve
     // registered rollups from state + delta without the runtime install
     ext.injectOptimizerRule(_ => graft.plans.MaterializedViewRewrite)
@@ -28,48 +33,60 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private type Builder = Seq[Expression] => Expression
+  private def native(name: String, usage: String)(b: Seq[Expression] => Expression): Fn =
+    Fn(name, "native codegen", usage, Some(b))
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  val natives: Seq[Fn] = Seq(
+    native("vec_dot", "vec_dot(a, b) - dot product of two double arrays")(
+      args => DotProduct(args(0), args(1))),
+    native("vec_l2sq", "vec_l2sq(a, b) - squared L2 distance of two double arrays")(
+      args => SquaredL2Distance(args(0), args(1))),
+    native("jaccard_sorted",
+      "jaccard_sorted(a, b) - Jaccard of two sorted distinct long arrays")(
+      args => JaccardSorted(args(0), args(1))),
+    native("minhash_sig",
+      "minhash_sig(hashes, k) - k-permutation MinHash signature of a long array")(
+      args => MinHashSignature(args(0), args(1).eval().asInstanceOf[Int])),
+    native("stable_hash32",
+      "stable_hash32(s) - first 4 md5 bytes as unsigned 32-bit long")(
+      args => StableHash32(args(0))),
+    native("jaro_winkler",
+      "jaro_winkler(a, b) - Jaro-Winkler similarity (DuckDB-identical semantics)")(
+      args => JaroWinkler(args(0), args(1))),
+    native("nfc_normalize",
+      "nfc_normalize(s) - Unicode NFC canonical composition (DuckDB-compatible name)")(
+      args => NfcNormalize(args(0))),
+    native("word_shingle_hashes",
+      "word_shingle_hashes(text, n) - distinct word n-gram shingle hashes")(
+      args => WordShingleHashes(args(0), args(1).eval().asInstanceOf[Int])))
 
-  val definitions: Seq[(String, ExpressionInfo, Builder)] = Seq(
-    ("vec_dot", info("vec_dot", "vec_dot(a, b) - dot product of two double arrays"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))),
-    ("vec_l2sq", info("vec_l2sq", "vec_l2sq(a, b) - squared L2 distance of two double arrays"),
-      (args: Seq[Expression]) => SquaredL2Distance(args(0), args(1))),
-    ("jaccard_sorted", info("jaccard_sorted",
-      "jaccard_sorted(a, b) - Jaccard of two sorted distinct long arrays"),
-      (args: Seq[Expression]) => JaccardSorted(args(0), args(1))),
-    ("minhash_sig", info("minhash_sig",
-      "minhash_sig(hashes, k) - k-permutation MinHash signature of a long array"),
-      (args: Seq[Expression]) => MinHashSignature(args(0),
-        args(1).eval().asInstanceOf[Int])),
-    ("stable_hash32", info("stable_hash32",
-      "stable_hash32(s) - first 4 md5 bytes as unsigned 32-bit long"),
-      (args: Seq[Expression]) => StableHash32(args(0))),
-    ("jaro_winkler", info("jaro_winkler",
-      "jaro_winkler(a, b) - Jaro-Winkler similarity (DuckDB-identical semantics)"),
-      (args: Seq[Expression]) => JaroWinkler(args(0), args(1))),
-    ("nfc_normalize", info("nfc_normalize",
-      "nfc_normalize(s) - Unicode NFC canonical composition (DuckDB-compatible name)"),
-      (args: Seq[Expression]) => NfcNormalize(args(0))),
-    ("word_shingle_hashes", info("word_shingle_hashes",
-      "word_shingle_hashes(text, n) - distinct word n-gram shingle hashes"),
-      (args: Seq[Expression]) => WordShingleHashes(args(0),
-        args(1).eval().asInstanceOf[Int])),
-    // KSQL spellings for pure-SQL users
-    ("ucase", info("ucase", "ucase(s) - KSQL alias of upper"),
-      (args: Seq[Expression]) => Upper(args(0))),
-    ("lcase", info("lcase", "lcase(s) - KSQL alias of lower"),
-      (args: Seq[Expression]) => Lower(args(0))),
-    ("len", info("len", "len(s) - KSQL alias of length"),
-      (args: Seq[Expression]) => Length(args(0))),
-    ("ifnull", info("ifnull", "ifnull(x, alt) - KSQL alias of coalesce"),
-      (args: Seq[Expression]) => Coalesce(args)),
-    ("extractjsonfield", info("extractjsonfield",
-      "extractjsonfield(json, path) - KSQL alias of get_json_object"),
-      (args: Seq[Expression]) => GetJsonObject(args(0), args(1))))
+  /** Every SQL function graft serves: what DESCRIBE and SHOW FUNCTIONS list. */
+  val functions: Seq[Fn] = natives ++ KsqlFunctions.table
+
+  /** A bare ksqlDB name is registered only where plain SQL would reach
+    * it: Spark has no function of that name, and Spark's parser reads
+    * `name(DAY, 1, x)` as an ordinary call, not a grammar form such as
+    * TIMESTAMPADD. */
+  private def bareNameFree(name: String): Boolean =
+    !FunctionRegistry.builtin.functionExists(FunctionIdentifier(name)) &&
+      scala.util.Try(CatalystSqlParser.parseExpression(s"$name(DAY, 1, x)"))
+        .toOption.exists {
+          case f: UnresolvedFunction => f.nameParts == Seq(name)
+          case _ => false
+        }
+
+  private lazy val registrations
+  : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    functions.flatMap { f =>
+      val names =
+        if (f.kind == "native codegen") Seq(f.name)
+        else {
+          val bare = f.name.toLowerCase(java.util.Locale.ROOT)
+          KsqlFunctions.sqlName(f) +: Seq(bare).filter(bareNameFree)
+        }
+      for (b <- f.builder.toSeq; n <- names) yield (FunctionIdentifier(n),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, n, f.usage, ""), b)
+    }
 
   /** Runtime registration into an existing session. */
   def register(spark: SparkSession): Unit = {
@@ -79,9 +96,8 @@ object GraftExtensions {
     // engine's session front door (Translator.run calls it), so every
     // graft path gets the type without user configuration.
     spark.conf.set("spark.sql.timeType.enabled", "true")
-    definitions.foreach { case (name, i, b) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(FunctionIdentifier(name), i, b)
+    registrations.foreach { case (id, info, b) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, b)
     }
   }
 }

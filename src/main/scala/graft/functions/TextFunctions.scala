@@ -34,10 +34,6 @@ object TextFunctions {
     ColumnBridge.column(StableHash32(ColumnBridge.expression(c)))
   }
 
-  /** SQL-built formulation (kept for equivalence testing). */
-  def stableHash32Sql(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
   /** Unicode NFC canonical composition — native codegen expression
     * (graftbridge.NfcNormalize); DuckDB-compatible semantics
     * (nfc_normalize). The required first step before hashing text for
@@ -67,8 +63,8 @@ object TextFunctions {
     * mod p over the shingle set's stable hashes. Returns array<long>[k].
     * Pure projection — signatures cost O(k * |shingles|) per row, no
     * shuffle; the LSH banding afterwards is what bounds pair generation.
-    * Computed by the native one-pass codegen expression (the HOF version
-    * below is interpreted per-lambda and ~50x slower at scale).
+    * Computed by the native one-pass codegen expression (a HOF version
+    * is interpreted per-lambda and ~50x slower at scale).
     */
   def minhashSignature(shingles: Column, k: Int = 16): Column = {
     import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSignature}
@@ -89,32 +85,15 @@ object TextFunctions {
     ColumnBridge.column(MinHashSignature(ColumnBridge.expression(hashes), k))
   }
 
-  /** Reference HOF formulation (kept for equivalence testing). */
-  def minhashSignatureHof(shingles: Column, k: Int = 16): Column = {
-    val hashes = transform(shingles, s => stableHash32(s))
-    transform(sequence(lit(0), lit(k - 1)), j =>
-      aggregate(hashes, lit(Long.MaxValue),
-        (acc, x) => least(acc, ((lit(2L) * j + 1L) * x + j * 12345L + 7L) % 2147483647L)))
-  }
-
   /** 32-bit SimHash over the distinct-word set: bit i is set when the sum
     * of ±1 votes from word-hash bit i is positive. Native one-pass
-    * codegen expression (graftbridge.SimHash32) — the HOF form below
-    * walks the array 32 times with interpreted lambda dispatch and was
+    * codegen expression (graftbridge.SimHash32) — a HOF form walks the
+    * array 32 times with interpreted lambda dispatch and was
     * the dominant cost of q_dedup_simhash. */
   def simhash32(wordHashesCol: String): Column = {
     import org.apache.spark.sql.graftbridge.{ColumnBridge, SimHash32}
     ColumnBridge.column(SimHash32(ColumnBridge.expression(col(wordHashesCol))))
   }
-
-  /** Reference HOF formulation (kept for equivalence testing). */
-  def simhash32Hof(wordHashesCol: String): Column = expr(
-    s"""aggregate(
-       |  transform(sequence(0, 31), i ->
-       |    IF(aggregate($wordHashesCol, CAST(0 AS BIGINT),
-       |         (acc, h) -> acc + IF(shiftright(h, i) % 2 = 1, 1, -1)) > 0,
-       |       shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),
-       |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin)
 
   /** Sliding word-n-gram xxhash64 keys in one native pass — value-
     * identical to `transform(sequence(1, size(w)-(n-1)), i ->

@@ -18,10 +18,6 @@ object VectorFunctions {
     * array or lambda dispatch. See expressions.DotProduct. */
   def dot(a: Column, b: Column): Column = expressions.VectorExpressions.dot(a, b)
 
-  /** Reference HOF formulation (kept for equivalence testing). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity; a zero vector has no direction, so any pair

@@ -1760,8 +1760,8 @@ object KsqlQueries {
 
     // ksqlDB invocable (lambda) functions — TRANSFORM/FILTER/REDUCE with
     // `=>` arrows land on Spark's native transform/filter/reduce HOFs
-    // (codegen'd, no UDF); the 3-arg map TRANSFORM builds both lambdas
-    // over the ORIGINAL entries in one map_entries pass. Oracle replays
+    // (codegen'd, no UDF); both lambdas of the 3-arg map TRANSFORM read
+    // the ORIGINAL entries (KsqlFunctions.transformMap). Oracle replays
     // the array HOFs with DuckDB list_* lambdas and the map transform in
     // closed form.
     "q_ksql_lambda" -> Q(

@@ -2,12 +2,14 @@ package graft.ksql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.KsqlFunctions
 
 /** Translates the KSQL AST onto Spark.
   *
   * Design: expression text passes through Spark SQL's own parser after
-  * KSQL→Spark function-name rewriting (UCASE→upper, EXTRACTJSONFIELD→
-  * get_json_object, MASK→regexp chain, …); statement structure (windows,
+  * a syntax-only rewrite (rewriteExpr); ksqlDB functions are Catalyst
+  * builders (graft.functions.KsqlFunctions) the analyzer resolves like
+  * Spark's own; statement structure (windows,
   * WITHIN joins, PARTITION BY, EMIT CHANGES) is rebuilt as DataFrame
   * algebra — windows become `window()`/`session_window()` groupings, so a
   * translated continuous query plans EXACTLY like the hand-written
@@ -59,66 +61,6 @@ object Translator {
     // identifiers carry no whitespace, so stripping it is lossless here
     e.replaceAll("\\s", "") match { case m(c) => Some(c); case _ => None }
   }
-
-  // KSQL functions that expand to Spark SQL (not simple renames):
-  // name → usage line, served by SHOW FUNCTIONS / DESCRIBE FUNCTION
-  private val expansionFns: Map[String, String] = Map(
-    "MASK" -> "MASK(str) - mask letters/digits (X/x/n, other → -)",
-    "MASK_LEFT" -> "MASK_LEFT(str, n) - mask the first n chars",
-    "MASK_RIGHT" -> "MASK_RIGHT(str, n) - mask the last n chars",
-    "MASK_KEEP_LEFT" -> "MASK_KEEP_LEFT(str, n) - mask all but the first n",
-    "MASK_KEEP_RIGHT" -> "MASK_KEEP_RIGHT(str, n) - mask all but the last n",
-    "HISTOGRAM" -> "HISTOGRAM(col) - value → count map aggregate",
-    "TOPK" -> "TOPK(col, k) - k largest values per group",
-    "TOPKDISTINCT" -> "TOPKDISTINCT(col, k) - k largest distinct values",
-    "GEO_DISTANCE" -> "GEO_DISTANCE(lat1, lon1, lat2, lon2[, unit]) - haversine",
-    "FIELD" -> "FIELD(x, v1, ...) - 1-based index of x in the list, 0 if absent",
-    "STRINGTOTIMESTAMP" -> "STRINGTOTIMESTAMP(s[, fmt[, tz]]) - parse to epoch millis",
-    "TIMESTAMPTOSTRING" -> "TIMESTAMPTOSTRING(millis, fmt[, tz]) - format an instant",
-    "FROM_UNIXTIME" -> "FROM_UNIXTIME(millis) - millis to TIMESTAMP",
-    "UNIX_TIMESTAMP" -> "UNIX_TIMESTAMP([ts]) - TIMESTAMP to epoch millis",
-    "URL_EXTRACT_HOST" -> "URL_EXTRACT_HOST(url) - host part",
-    "URL_EXTRACT_PATH" -> "URL_EXTRACT_PATH(url) - path part",
-    "URL_EXTRACT_PROTOCOL" -> "URL_EXTRACT_PROTOCOL(url) - scheme",
-    "URL_EXTRACT_QUERY" -> "URL_EXTRACT_QUERY(url) - query string",
-    "URL_EXTRACT_FRAGMENT" -> "URL_EXTRACT_FRAGMENT(url) - fragment",
-    "URL_EXTRACT_PORT" -> "URL_EXTRACT_PORT(url) - port or NULL",
-    "URL_EXTRACT_PARAMETER" -> "URL_EXTRACT_PARAMETER(url, name) - query param value",
-    "URL_ENCODE_PARAM" -> "URL_ENCODE_PARAM(s) - urlencode",
-    "URL_DECODE_PARAM" -> "URL_DECODE_PARAM(s) - urldecode",
-    "TRANSFORM" -> "TRANSFORM(arr, x => e) / TRANSFORM(map, kLambda, vLambda)",
-    "FILTER" -> "FILTER(arr, x => pred) - keep matching elements",
-    "REDUCE" -> "REDUCE(arr, init, (acc, x) => e) - left fold",
-    "ARRAY_SORT" -> "ARRAY_SORT(arr[, 'ASC'|'DESC']) - sort, nulls last",
-    "ARRAY_CONCAT" -> "ARRAY_CONCAT(a, b) - concat; one NULL side returns the other",
-    "IS_JSON_STRING" -> "IS_JSON_STRING(s) - true when s parses as JSON",
-    "ENCODE" -> "ENCODE(str, 'utf8'|'hex'|'base64'|'ascii', out) - re-encode",
-    "EXPLODE" -> "EXPLODE(arr) - table function: one row per element",
-    "JSON_CONCAT" -> "JSON_CONCAT(a, b, ...) - merge JSON objects, later keys win",
-    "JSON_RECORDS" -> "JSON_RECORDS(s) - top-level keys -> stringified values map",
-    "JSON_ITEMS" -> "JSON_ITEMS(s) - JSON array -> array of element JSON strings",
-    "JSON_ARRAY_CONTAINS" -> "JSON_ARRAY_CONTAINS(s, v) - membership in a JSON array string",
-    "DATEADD" -> "DATEADD(unit, n, date) - add n units to a date",
-    "DATESUB" -> "DATESUB(unit, n, date) - subtract n units from a date",
-    "TIMESTAMPADD" -> "TIMESTAMPADD(unit, n, ts) - add n units to a timestamp",
-    "TIMESTAMPSUB" -> "TIMESTAMPSUB(unit, n, ts) - subtract n units",
-    "SLICE" -> "SLICE(arr, from, to) - 1-based inclusive subarray",
-    "PARSE_TIMESTAMP" -> "PARSE_TIMESTAMP(s, fmt[, tz]) - parse to TIMESTAMP",
-    "FORMAT_TIMESTAMP" -> "FORMAT_TIMESTAMP(ts, fmt[, tz]) - render an instant",
-    "PARSE_DATE" -> "PARSE_DATE(s, fmt) - parse to DATE",
-    "FORMAT_DATE" -> "FORMAT_DATE(d, fmt) - render a date",
-    "GENERATE_SERIES" -> "GENERATE_SERIES(start, end[, step]) - integer array",
-    "MAP_UNION" -> "MAP_UNION(m1, m2) - merge maps, later keys win",
-    "AS_MAP" -> "AS_MAP(keys, vals) - zip two arrays into a map",
-    "FROM_DAYS" -> "FROM_DAYS(n) - days since epoch to DATE",
-    "ENTRIES" -> "ENTRIES(map, sorted) - ARRAY<STRUCT<K, V>>, sorted by K when true",
-    "FROM_BYTES" -> "FROM_BYTES(bytes, 'hex'|'base64'|'utf8'|'ascii') - bytes to string",
-    "TO_BYTES" -> "TO_BYTES(str, 'hex'|'base64'|'utf8'|'ascii') - string to bytes",
-    "AS_VALUE" -> "AS_VALUE(keyCol) - copy the key column into the value schema",
-    "PARSE_TIME" -> "PARSE_TIME(s, fmt) - parse a wall-clock string to TIME",
-    "FORMAT_TIME" -> "FORMAT_TIME(t, fmt) - render a time of day",
-    "TIMEADD" -> "TIMEADD(unit, n, time) - add n units to a time (wraps at midnight)",
-    "TIMESUB" -> "TIMESUB(unit, n, time) - subtract n units from a time (wraps)")
 
   // Session-scoped KSQL CLI properties (SET / UNSET / SHOW PROPERTIES).
   // WeakHashMap so a stopped/dropped SparkSession doesn't stay pinned
@@ -342,958 +284,145 @@ object Translator {
     }
   }
 
-  // KSQL function name → Spark SQL rewrite. Applied token-wise, case-
-  // insensitively, only at word boundaries followed by '('.
-  private val fnRename: Map[String, String] = Map(
-    "UCASE" -> "upper", "LCASE" -> "lower", "LEN" -> "length",
-    "TRIM" -> "trim", "SUBSTRING" -> "substring", "CONCAT" -> "concat",
-    "REPLACE" -> "replace", "SPLIT" -> "split", "IFNULL" -> "coalesce",
-    "EXTRACTJSONFIELD" -> "get_json_object",
-    "ARRAYCONTAINS" -> "array_contains",
-    "STRINGTODATE" -> "to_date", "DATETOSTRING" -> "date_format",
-    "ABS" -> "abs", "CEIL" -> "ceil", "FLOOR" -> "floor",
-    "ROUND" -> "round", "SQRT" -> "sqrt", "RANDOM" -> "rand",
-    "COUNT" -> "count", "SUM" -> "sum", "MIN" -> "min", "MAX" -> "max",
-    "AVG" -> "avg", "COUNT_DISTINCT" -> "count_distinct",
-    "COLLECT_LIST" -> "collect_list", "COLLECT_SET" -> "collect_set",
-    "LATEST_BY_OFFSET" -> "max_by", "EARLIEST_BY_OFFSET" -> "min_by",
-    "INITCAP" -> "initcap", "LPAD" -> "lpad", "RPAD" -> "rpad",
-    "INSTR" -> "instr", "ARRAY_LENGTH" -> "size",
-    "REGEXP_EXTRACT" -> "regexp_extract", "POWER" -> "pow",
-    "ELT" -> "elt", "CONCAT_WS" -> "concat_ws",
-    // ksqlDB array/map/JSON names whose Spark spelling differs (the
-    // same-name ones — ARRAY_DISTINCT, ARRAY_EXCEPT, ARRAY_INTERSECT,
-    // ARRAY_UNION, ARRAY_MAX/MIN, ARRAY_REMOVE, ARRAY_JOIN, MAP_KEYS,
-    // MAP_VALUES, REGEXP_EXTRACT_ALL, UUID — pass through to Spark's
-    // case-insensitive registry untouched)
-    "SPLIT_TO_MAP" -> "str_to_map",
-    // TO_JSON_STRING maps to to_json, which accepts STRUCT/MAP/ARRAY
-    // (+VARIANT) — ksqlDB also serializes bare primitives; that form
-    // surfaces as a positioned analysis error, not silent wrong output
-    "JSON_KEYS" -> "json_object_keys", "TO_JSON_STRING" -> "to_json",
-    "JSON_ARRAY_LENGTH" -> "json_array_length",
-    "REGEXP_SPLIT_TO_ARRAY" -> "split",
-    // round 10: remaining ksqlDB scalar names with direct Spark
-    // spellings (GREATEST/LEAST/NULLIF/CBRT/COT/EXP/LN/SIGN/trig and
-    // UNIX_DATE already pass through by name)
-    "GENERATE_SERIES" -> "sequence", "MAP_UNION" -> "map_concat",
-    "AS_MAP" -> "map_from_arrays", "FROM_DAYS" -> "date_from_unix_date",
-    "PARSE_DATE" -> "to_date", "FORMAT_DATE" -> "date_format",
-    // round 17: CORRELATION is ksqlDB 0.21's Pearson aggregate (Spark
-    // spells it corr); STDDEV_SAMP/VAR_SAMP/VAR_POP pass through by name
-    "CORRELATION" -> "corr",
-    // round 18: ksqlDB 0.20's TIME type carried on Spark 4.1's TIME —
-    // PARSE_TIME is a direct rename (to_time takes (str, fmt) with the
-    // same time-field pattern letters); FORMAT_TIME/TIMEADD/TIMESUB
-    // need expansions (expandTimestamps)
-    "PARSE_TIME" -> "to_time")
+  /** The dialect's expression syntax → Spark SQL text, in one
+    * quote-aware scan. Functions are not expanded here: each ksqlDB
+    * function is a Catalyst builder in graft.functions.KsqlFunctions, so
+    * the only call rewrite renames a table function `NAME(` to the
+    * `ksql_name(` it is registered under. The syntax rewrites:
+    *  - lambdas `x => e` / `(a, b) => e` → Spark's `->` (`<=>` stays);
+    *  - tight struct dereference `s->f` → `s.f`: an identifier, `]` or
+    *    `)` right before the arrow and a field name right after, so a
+    *    spaced lambda arrow `x -> e` stays a lambda;
+    *  - `ARRAY[a, b]` → `array(a, b)`, `MAP(k := v, …)` → `map(k, v, …)`
+    *    and `STRUCT(f := v, …)` → `named_struct('f', v, …)`; calls
+    *    without `:=` are Spark's own and pass through;
+    *  - subscripts `x[i]` → `try_element_at(x, i)`: ksqlDB indexes from
+    *    1, counts a negative index from the end, and yields NULL for a
+    *    missing index or map key (Spark's `[ ]` is 0-based and errors);
+    *    subscripting a bare CASE…END needs parentheses;
+    *  - bare `VARCHAR` → `STRING` (Spark's varchar needs a length);
+    *  - the bare TimeUnit first argument of DATEADD & co. is quoted.
+    * Single-quoted literals ('' escapes included) pass verbatim. The
+    * output holds none of these forms, so a second pass is identity. */
+  def rewriteExpr(e: String): String = new ExprScan(e).seq("", assign = false)
 
-  /** Rewrite every `name(arg, …)` call in `sql` via `f`, scanning
-    * balanced parens (quote-aware) so nested calls and arbitrary
-    * expressions survive as arguments — a `[^,()]+` regex silently
-    * skips MASK_LEFT(UCASE(x), n) and surfaces later as an opaque
-    * unresolved-function error from Spark's parser. After each
-    * replacement the string is rescanned; replacement text never
-    * reintroduces `name`, so the loop terminates.
-    *
-    * A candidate match is skipped when it starts INSIDE a single-quoted
-    * literal (WHERE note = 'see MASK(x)') — quote parity is scanned up
-    * to the match start ('' escapes toggle twice, netting out), so the
-    * arg scanner below also starts with a correct inStr=false. */
-  private def rewriteCall(sql: String, name: String)(f: Seq[String] => String): String = {
-    val re = raw"(?i)\b$name\s*\(".r
-    def inLiteral(s: String, until: Int): Boolean = {
-      var in = false; var i = 0
-      while (i < until) { if (s.charAt(i) == '\'') in = !in; i += 1 }
-      in
-    }
-    @annotation.tailrec
-    def loop(s: String): String =
-      re.findAllMatchIn(s).find(m => !inLiteral(s, m.start)) match {
-      case None => s
-      case Some(m) =>
-        val open = m.end - 1
-        var i = open; var depth = 0; var close = -1; var inStr = false
-        var argStart = open + 1
-        val args = Seq.newBuilder[String]
-        while (close < 0 && i < s.length) {
-          val c = s.charAt(i)
-          if (c == '\'') inStr = !inStr
-          else if (!inStr) c match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case ',' if depth == 1 =>
-              args += s.substring(argStart, i).trim; argStart = i + 1
-            case _ =>
-          }
-          i += 1
-        }
-        if (close < 0)
-          throw new IllegalArgumentException(s"unbalanced parens in $name(…): $s")
-        val last = s.substring(argStart, close).trim
-        val all = args.result() ++ (if (last.nonEmpty || args.result().nonEmpty) Seq(last) else Nil)
-        loop(s.substring(0, m.start) + f(all) + s.substring(close + 1))
-    }
-    loop(sql)
-  }
+  private final class ExprScan(s: String) {
+    private var i = 0
+    private def at(k: Int, c: Char) = k >= 0 && k < s.length && s.charAt(k) == c
+    private def isIdent(k: Int) =
+      k >= 0 && k < s.length && (s.charAt(k).isLetterOrDigit || s.charAt(k) == '_')
+    private def expect(c: Char): Unit =
+      if (at(i, c)) i += 1
+      else throw new IllegalArgumentException(s"unbalanced brackets, expected '$c' in: $s")
 
-  private def arity(name: String, args: Seq[String], n: Int): Unit =
-    if (args.length != n) throw new IllegalArgumentException(
-      s"$name expects $n arguments, got ${args.length}: (${args.mkString(", ")})")
-
-  /** MASK(x) family → nested regexp_replace chains (no UDF). Semantics
-    * mirror graft.functions.KsqlFunctions (upper→X, lower→x, digit→n;
-    * the positional variants mask/keep a prefix or suffix). */
-  private def expandMask(sql: String): String = {
-    def chain(inner: String): String =
-      s"regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
-        s"$inner,'[^A-Za-z0-9]','-'),'[A-Z]','X'),'[a-z]','x'),'[0-9]','n')"
-    val variants: Seq[(String, (String, String) => String)] = Seq(
-      "MASK_LEFT" -> ((x: String, n: String) =>
-        s"concat(${chain(s"substring($x, 1, $n)")}, " +
-          s"substring($x, $n + 1, greatest(length($x) - $n, 0)))"),
-      "MASK_RIGHT" -> ((x: String, n: String) =>
-        s"if(length($x) <= $n, ${chain(x)}, " +
-          s"concat(substring($x, 1, length($x) - $n), " +
-          s"${chain(s"substring($x, length($x) - $n + 1, $n)")}))"),
-      "MASK_KEEP_LEFT" -> ((x: String, n: String) =>
-        s"concat(substring($x, 1, $n), " +
-          s"${chain(s"substring($x, $n + 1, greatest(length($x) - $n, 0))")})"),
-      "MASK_KEEP_RIGHT" -> ((x: String, n: String) =>
-        s"if(length($x) <= $n, $x, " +
-          s"concat(${chain(s"substring($x, 1, length($x) - $n)")}, " +
-          s"substring($x, length($x) - $n + 1, $n)))"))
-    val expanded = variants.foldLeft(sql) { case (acc, (name, f)) =>
-      rewriteCall(acc, name) { args =>
-        arity(name, args, 2); f(args(0), args(1))
+    /** Rewrite up to a depth-0 char of `stops` (or `:=` when `assign`),
+      * which is left unconsumed, or to the end. */
+    def seq(stops: String, assign: Boolean): String = {
+      val out = new StringBuilder
+      // output offset where the expression ending here starts, or -1
+      // when no subscript can apply; `dotted`: the same, across a '.'
+      var primary = -1
+      var dotted = -1
+      def atom(start: Int, text: String): Unit = {
+        primary = if (dotted >= 0) dotted else start
+        dotted = -1
+        out.append(text)
       }
-    }
-    rewriteCall(expanded, "MASK") { args =>
-      arity("MASK", args, 1); chain(args.head)
-    }
-  }
-
-  /** HISTOGRAM(x) → map<string,bigint> of value counts, built by
-    * run-length-encoding the sorted collect_list — one aggregate, no
-    * UDAF, no duplicate-map-key hazard. */
-  private def expandHistogram(sql: String): String =
-    rewriteCall(sql, "HISTOGRAM") { args =>
-      arity("HISTOGRAM", args, 1)
-      val x = args.head
-      // the run-length bump replaces the LAST accumulator entry via an
-      // indexed transform, NOT concat(slice(acc, 1, size-1), …): the
-      // emitted text must never contain `slice(` — ksqlDB's SLICE has
-      // inclusive-end semantics and its rewrite would re-interpret
-      // Spark's length-based slice on a second pass (fuzz idempotency)
-      s"""map_from_entries(aggregate(
-         |  sort_array(collect_list(cast($x as string))),
-         |  cast(array() as array<struct<k: string, v: bigint>>),
-         |  (acc, e) -> if(size(acc) > 0 and element_at(acc, -1).k = e,
-         |    transform(acc, (x, i) -> if(i = size(acc) - 1,
-         |      named_struct('k', e, 'v', element_at(acc, -1).v + 1), x)),
-         |    concat(acc, array(named_struct('k', e, 'v', cast(1 as bigint)))))))"""
-        .stripMargin.replaceAll("\n", " ")
-    }
-
-  /** KSQL time functions work in epoch MILLIS (BIGINT), Spark's in
-    * TIMESTAMPs — a name rename alone would change the result type, so
-    * these expand to the millis-preserving forms. */
-  private def expandTimeFns(sql: String): String = {
-    // optional 3rd arg (ksqlDB 5.4+): a timezone id. Parsing treats the
-    // string as wall-clock in that zone; formatting renders the instant
-    // in that zone. The tz forms go through TIMESTAMP_NTZ + convert_
-    // timezone + epoch arithmetic so the result is independent of
-    // spark.sql.session.timeZone (a to_utc_/from_utc_timestamp pair is
-    // only correct when the session zone is UTC — the session offset
-    // leaks into to_timestamp/date_format). The NO-tz forms stay
-    // session-zone dependent on purpose: KSQL without a tz arg uses the
-    // server default zone, and the session zone is our server zone.
-    val ntzEpoch = "timestamp_ntz'1970-01-01 00:00:00'"
-    val s1 = rewriteCall(sql, "STRINGTOTIMESTAMP") { args =>
-      if (args.length < 1 || args.length > 3) throw new IllegalArgumentException(
-        s"STRINGTOTIMESTAMP expects (str[, fmt[, tz]]), got ${args.length} args")
-      if (args.length == 3) {
-        // wall-clock in tz → UTC wall-clock (NTZ, zone-rule aware) →
-        // millis since the epoch by pure NTZ subtraction
-        val ntz = s"to_timestamp_ntz(${args.take(2).mkString(", ")})"
-        s"timestampdiff(MILLISECOND, $ntzEpoch, " +
-          s"convert_timezone(${args(2)}, 'UTC', $ntz))"
-      } else s"unix_millis(to_timestamp(${args.mkString(", ")}))"
-    }
-    val s2 = rewriteCall(s1, "TIMESTAMPTOSTRING") { args =>
-      if (args.length < 2 || args.length > 3) throw new IllegalArgumentException(
-        s"TIMESTAMPTOSTRING expects (millis, fmt[, tz]), got ${args.length} args")
-      if (args.length == 3) {
-        // millis → UTC wall-clock (NTZ) → tz wall-clock; date_format on
-        // NTZ renders the local datetime with no session-zone shift
-        val utcWall = s"timestampadd(MILLISECOND, ${args(0)}, $ntzEpoch)"
-        s"date_format(convert_timezone('UTC', ${args(2)}, $utcWall), ${args(1)})"
-      } else s"date_format(timestamp_millis(${args(0)}), ${args(1)})"
-    }
-    val s3 = rewriteCall(s2, "FROM_UNIXTIME") { args =>
-      arity("FROM_UNIXTIME", args, 1)
-      s"timestamp_millis(${args.head})"
-    }
-    rewriteCall(s3, "UNIX_TIMESTAMP") { args =>
-      if (args.length > 1) throw new IllegalArgumentException(
-        s"UNIX_TIMESTAMP expects 0 or 1 arguments, got ${args.length}")
-      if (args.isEmpty) "unix_millis(current_timestamp())"
-      else s"unix_millis(${args.head})"
-    }
-  }
-
-  /** GEO_DISTANCE(lat1, lon1, lat2, lon2[, unit]) → haversine formula. */
-  private def expandGeo(sql: String): String =
-    rewriteCall(sql, "GEO_DISTANCE") { args =>
-      if (args.length < 4) throw new IllegalArgumentException(
-        s"GEO_DISTANCE expects (lat1, lon1, lat2, lon2[, unit]), got ${args.length} args")
-      val Seq(lat1, lon1, lat2, lon2) = args.take(4)
-      val r = if (args.length > 4 && args(4).toUpperCase.contains("MI")) 3959.0 else 6371.0
-      s"(2 * $r * asin(sqrt(least(pow(sin(radians($lat2 - $lat1) / 2), 2) " +
-        s"+ cos(radians($lat1)) * cos(radians($lat2)) " +
-        s"* pow(sin(radians($lon2 - $lon1) / 2), 2), 1.0))))"
-    }
-
-  /** KSQL URL function family → Spark's parse_url / url codec.
-    * URL_EXTRACT_PORT has no parse_url part — a regexp on the
-    * authority; URL_EXTRACT_PARAMETER is the 3-arg parse_url form. */
-  private def expandUrl(sql: String): String = {
-    val parts = Seq("HOST" -> "HOST", "PATH" -> "PATH",
-      "PROTOCOL" -> "PROTOCOL", "QUERY" -> "QUERY", "FRAGMENT" -> "REF")
-    val s1 = parts.foldLeft(sql) { case (acc, (ksql, spark)) =>
-      rewriteCall(acc, s"URL_EXTRACT_$ksql") { args =>
-        arity(s"URL_EXTRACT_$ksql", args, 1)
-        s"parse_url(${args(0)}, '$spark')"
-      }
-    }
-    val s2 = rewriteCall(s1, "URL_EXTRACT_PARAMETER") { args =>
-      arity("URL_EXTRACT_PARAMETER", args, 2)
-      s"parse_url(${args(0)}, 'QUERY', ${args(1)})"
-    }
-    val s3 = rewriteCall(s2, "URL_EXTRACT_PORT") { args =>
-      arity("URL_EXTRACT_PORT", args, 1)
-      // port = digits after the last ':' of the authority; NULL when
-      // absent (KSQL semantics), hence the nullif on the empty match
-      s"cast(nullif(regexp_extract(parse_url(${args(0)}, 'AUTHORITY'), " +
-        "':([0-9]+)$', 1), '') as int)"
-    }
-    val s4 = rewriteCall(s3, "URL_ENCODE_PARAM") { args =>
-      arity("URL_ENCODE_PARAM", args, 1); s"url_encode(${args(0)})"
-    }
-    rewriteCall(s4, "URL_DECODE_PARAM") { args =>
-      arity("URL_DECODE_PARAM", args, 1); s"url_decode(${args(0)})"
-    }
-  }
-
-  /** TOPK(x, k) / TOPKDISTINCT(x, k) → sorted first-k aggregates.
-    * First-k is an indexed filter, not Spark's `slice(…, 1, k)`: no
-    * expansion may emit the token `slice(` — ksqlDB's SLICE rewrite
-    * (inclusive-end convention) would re-interpret it on a second
-    * pass and break the fuzz idempotency invariant. */
-  private def expandTopK(sql: String): String = {
-    val topk = rewriteCall(sql, "TOPKDISTINCT") { args =>
-      arity("TOPKDISTINCT", args, 2)
-      s"filter(sort_array(collect_set(${args(0)}), false), (x, i) -> i < ${args(1)})"
-    }
-    rewriteCall(topk, "TOPK") { args =>
-      arity("TOPK", args, 2)
-      s"filter(sort_array(collect_list(${args(0)}), false), (x, i) -> i < ${args(1)})"
-    }
-  }
-
-  /** FIELD(x, v1, v2, …) → 1-based index of x in the list, 0 when
-    * absent (ksqlDB semantics) — expanded to a CASE chain so it stays
-    * inside whole-stage codegen. */
-  private def expandField(sql: String): String =
-    rewriteCall(sql, "FIELD") { args =>
-      if (args.length < 2) throw new IllegalArgumentException(
-        s"FIELD expects (expr, v1, …), got ${args.length} arguments")
-      val whens = args.tail.zipWithIndex
-        .map { case (v, i) => s"WHEN ($v) THEN ${i + 1}" }.mkString(" ")
-      s"(CASE (${args.head}) $whens ELSE 0 END)"
-    }
-
-  /** KSQL struct dereference `s->f` → Spark `s.f`, quote-aware. Only
-    * the TIGHT form rewrites — an identifier char (or `]`, for
-    * `arr[1]->f`) immediately before the arrow and a field-name start
-    * immediately after — so Spark lambda arrows survive verbatim, both
-    * in user-written HOFs (`transform(a, x -> x + 1)`) and in the
-    * lambdas our own expansions emit (HISTOGRAM's aggregate), which
-    * also makes the whole rewrite pipeline idempotent (fuzz-spec'd).
-    * A zero-space single-arg lambda `x->x` reads as deref by
-    * definition here: `->` IS this dialect's deref operator; write
-    * lambdas with the idiomatic spaces. */
-  private def structDeref(e: String): String = {
-    val sb = new StringBuilder
-    var i = 0; var in = false
-    while (i < e.length) {
-      val c = e.charAt(i)
-      if (c == '\'') { in = !in; sb.append(c); i += 1 }
-      else if (!in && c == '-' && i + 1 < e.length && e.charAt(i + 1) == '>'
-          // ')' admits deref on a call result — STRUCT(f := v)->f after
-          // constructor expansion; lambdas keep their idiomatic space
-          && i > 0 && { val p = e.charAt(i - 1)
-                        p.isLetterOrDigit || p == '_' || p == ']' ||
-                          p == ')' }
-          && i + 2 < e.length && { val n = e.charAt(i + 2)
-                                   n.isLetter || n == '_' }) {
-        sb.append('.'); i += 2
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** ksqlDB lambda arrows: `x => e` / `(a, b) => e` → Spark's `->`
-    * (reference: ksqlDB's TRANSFORM/FILTER/REDUCE invokable functions,
-    * which Spark ships natively as transform/filter/reduce — after this
-    * pass the names need no rewrite at all). Runs AFTER structDeref, so
-    * `=>` lambdas — including the zero-space `x=>x` form that the deref
-    * operator would otherwise claim — never meet the deref rewrite.
-    * Quote-aware; a preceding `<` is excluded so Spark's null-safe
-    * `<=>` passing through the dialect survives verbatim. */
-  private def lambdaArrows(e: String): String = {
-    val sb = new StringBuilder
-    var i = 0; var in = false
-    while (i < e.length) {
-      val c = e.charAt(i)
-      if (c == '\'') { in = !in; sb.append(c); i += 1 }
-      else if (!in && c == '=' && i + 1 < e.length && e.charAt(i + 1) == '>'
-          && (i == 0 || e.charAt(i - 1) != '<')) {
-        sb.append("->"); i += 2
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Quote-aware whole-identifier substitution, ALL mappings applied in
-    * ONE pass (lambda params are plain identifiers; occurrences inside
-    * string literals survive). Single-pass matters: sequential passes
-    * would re-scan earlier replacements' output — a param named `key`
-    * or `value` would corrupt the `__e.key`/`__e.value` injected for
-    * the other param. */
-  private def substIdents(e: String, subs: Map[String, String]): String = {
-    val re = subs.keys.map(java.util.regex.Pattern.quote)
-      .mkString(raw"\b(", "|", raw")\b").r
-    val sb = new StringBuilder
-    var last = 0; var in = false
-    for (m <- re.findAllMatchIn(e)) {
-      var i = last
-      while (i < m.start) { if (e.charAt(i) == '\'') in = !in; i += 1 }
-      sb.append(e.substring(last, m.start))
-      sb.append(if (in) m.matched else subs(m.matched))
-      last = m.end
-    }
-    sb.append(e.substring(last)); sb.toString
-  }
-
-  /** ksqlDB's map TRANSFORM(map, keyLambda, valueLambda): both lambdas
-    * see the ORIGINAL (k, v) entries, so a transform_keys∘transform_values
-    * chain would be wrong (the second pass would see rewritten pairs);
-    * instead one pass over map_entries builds the new (key, value)
-    * structs directly. The 2-arg array form passes through to Spark's
-    * native transform — `__xform` is a loop-breaking placeholder
-    * (rewriteCall rescans to a fixpoint, and the output still contains
-    * the function). */
-  /** Round 17: the remaining ksqlDB byte/map-entry scalars. ENTRIES
-    * surfaces ksqlDB's ARRAY<STRUCT<K, V>> shape (field names K/V, not
-    * Spark's key/value) with the sort-by-key flag; FROM_BYTES/TO_BYTES
-    * carry the same encoding table as ENCODE (lowercase hex, US-ASCII
-    * '?' replacement); AS_VALUE is ksqlDB's key-into-value marker — an
-    * identity projection in graft's flattened model (the key IS a data
-    * column here). Second-pass identity holds: the emitted transform/
-    * array_sort/encode forms re-match their own expansions' pass-through
-    * arms (__xform/__asort/__encb), never this one's names. */
-  private def expandBytesEntries(sql: String): String = {
-    def enc(fn: String, a: String): String = {
-      val t = a.trim
-      if (!(t.startsWith("'") && t.endsWith("'")))
-        throw new IllegalArgumentException(
-          s"$fn encodings must be string literals, got: $a")
-      t.substring(1, t.length - 1).toLowerCase(java.util.Locale.ROOT)
-    }
-    val s1 = rewriteCall(sql, "ENTRIES") { args =>
-      arity("ENTRIES", args, 2)
-      val entries = s"transform(map_entries(${args.head}), " +
-        "__e -> named_struct('K', __e.key, 'V', __e.value))"
-      args(1).trim.toLowerCase(java.util.Locale.ROOT) match {
-        case "true" => s"array_sort($entries)" // struct sort = by K first
-        case "false" => entries
-        case other => throw new IllegalArgumentException(
-          s"ENTRIES(map, sorted): sorted must be a boolean literal, " +
-            s"got: $other")
-      }
-    }
-    val s2 = rewriteCall(s1, "FROM_BYTES") { args =>
-      arity("FROM_BYTES", args, 2)
-      val b = args.head
-      enc("FROM_BYTES", args(1)) match {
-        case "hex" => s"lower(hex($b))"
-        case "base64" => s"base64($b)"
-        case "utf8" => s"decode($b, 'UTF-8')"
-        case "ascii" => s"decode($b, 'US-ASCII')"
-        case other => throw new IllegalArgumentException(
-          s"FROM_BYTES: unsupported encoding '$other'")
-      }
-    }
-    val s3 = rewriteCall(s2, "TO_BYTES") { args =>
-      arity("TO_BYTES", args, 2)
-      val x = args.head
-      enc("TO_BYTES", args(1)) match {
-        case "hex" => s"unhex($x)"
-        case "base64" => s"unbase64($x)"
-        case "utf8" => s"encode($x, 'UTF-8')"
-        case "ascii" => s"encode($x, 'US-ASCII')"
-        case other => throw new IllegalArgumentException(
-          s"TO_BYTES: unsupported encoding '$other'")
-      }
-    }
-    rewriteCall(s3, "AS_VALUE") { args =>
-      arity("AS_VALUE", args, 1)
-      s"(${args.head})"
-    }
-  }
-
-  private def expandLambdas(sql: String): String = {
-    val lam = raw"(?s)^\(\s*([A-Za-z_]\w*)\s*,\s*([A-Za-z_]\w*)\s*\)\s*->\s*(.*)$$".r
-    val out = rewriteCall(sql, "TRANSFORM") { args =>
-      if (args.length == 2) s"__xform(${args.mkString(", ")})"
-      else if (args.length == 3) {
-        def body(l: String, slot: String): String = l match {
-          case lam(k, v, b) =>
-            substIdents(b, Map(k -> "__e.key", v -> "__e.value"))
-          case _ => throw new IllegalArgumentException(
-            s"TRANSFORM(map, keyLambda, valueLambda): $slot must be a " +
-              s"2-argument lambda `(k, v) => expr`, got: $l")
-        }
-        s"map_from_entries(__xform(map_entries(${args.head}), " +
-          s"__e -> struct(${body(args(1), "keyLambda")}, " +
-          s"${body(args(2), "valueLambda")})))"
-      } else throw new IllegalArgumentException(
-        s"TRANSFORM expects (array, lambda) or (map, keyLambda, " +
-          s"valueLambda), got ${args.length} args")
-    }
-    out.replaceAll(raw"(?i)\b__xform\(", "transform(")
-  }
-
-  /** ksqlDB ARRAY_SORT(arr[, 'ASC'|'DESC']), ARRAY_CONCAT and
-    * IS_JSON_STRING.
-    * ARRAY_SORT keeps ksqlDB's nulls-LAST convention in BOTH
-    * directions: ASC is Spark's array_sort (nulls last already); DESC
-    * is reverse(sort_array(.. asc)) — sort_array places nulls FIRST,
-    * so the reversal lands them last. A non-literal second argument is
-    * Spark's own comparator-lambda form and passes through untouched.
-    * `__asort` breaks the rewriteCall fixpoint (the output still
-    * matches ARRAY_SORT case-insensitively).
-    * ARRAY_CONCAT follows ksqlDB's null contract — one NULL side
-    * returns the other, both NULL returns NULL — which Spark's concat
-    * (NULL if ANY input is NULL) does not; args are duplicated into a
-    * CASE, the house pattern (MASK_RIGHT does the same).
-    * IS_JSON_STRING → try_parse_json IS NOT NULL: NULL and malformed
-    * both land false, matching ksqlDB. */
-  private def expandArrayJson(sql: String): String = {
-    val s1 = rewriteCall(sql, "ARRAY_SORT") { args =>
-      if (args.length == 1) s"__asort(${args.head})"
-      else if (args.length == 2) {
-        val dir = args(1).trim.toUpperCase
-        if (dir == "'DESC'") s"reverse(sort_array(${args.head}))"
-        else if (dir == "'ASC'") s"__asort(${args.head})"
-        else s"__asort(${args.mkString(", ")})"   // Spark comparator lambda
-      } else throw new IllegalArgumentException(
-        s"ARRAY_SORT expects (array[, direction|comparator]), got ${args.length} args")
-    }
-    val s2 = rewriteCall(s1, "ARRAY_CONCAT") { args =>
-      arity("ARRAY_CONCAT", args, 2)
-      val (a, b) = (args(0), args(1))
-      s"(CASE WHEN ($a) IS NULL THEN ($b) WHEN ($b) IS NULL THEN ($a) " +
-        s"ELSE concat($a, $b) END)"
-    }
-    val s3 = rewriteCall(s2, "IS_JSON_STRING") { args =>
-      arity("IS_JSON_STRING", args, 1)
-      s"(try_parse_json(${args.head}) IS NOT NULL)"
-    }
-    // ksqlDB ENCODE(str, inEnc, outEnc): representation conversion
-    // between utf8 / hex / base64 / ascii. Encodings must be string
-    // LITERALS (they pick the Spark expression at rewrite time).
-    val s4 = rewriteCall(s3, "ENCODE") { args =>
-      // Spark's own 2-arg encode(str, charset) passes through — also
-      // what keeps a second rewrite pass identity (fuzz invariant)
-      if (args.length == 2) s"__encb(${args.mkString(", ")})"
-      else {
-      arity("ENCODE", args, 3)
-      def enc(a: String) = {
-        val t = a.trim
-        if (!(t.startsWith("'") && t.endsWith("'"))) throw new IllegalArgumentException(
-          s"ENCODE encodings must be string literals, got: $a")
-        t.substring(1, t.length - 1).toLowerCase
-      }
-      val x = args.head
-      // to bytes from the input representation… (`__encb` breaks the
-      // rewriteCall fixpoint: Spark's own encode() would re-match the
-      // case-insensitive ENCODE scan and fail the 3-arity check)
-      val bytes = enc(args(1)) match {
-        case "utf8"  => s"__encb($x, 'UTF-8')"
-        // US-ASCII like ksqlDB: non-ASCII chars become '?' replacement
-        // bytes instead of silently hex/base64-dumping UTF-8 bytes
-        case "ascii" => s"__encb($x, 'US-ASCII')"
-        case "hex"            => s"unhex($x)"
-        case "base64"         => s"unbase64($x)"
-        case other => throw new IllegalArgumentException(
-          s"ENCODE: unsupported input encoding '$other'")
-      }
-      // …then to the output representation
-      enc(args(2)) match {
-        case "utf8"  => s"decode($bytes, 'UTF-8')"
-        case "ascii" => s"decode($bytes, 'US-ASCII')"
-        case "hex"            => s"lower(hex($bytes))"
-        case "base64"         => s"base64($bytes)"
-        case other => throw new IllegalArgumentException(
-          s"ENCODE: unsupported output encoding '$other'")
-      }
-      }
-    }
-    s4.replaceAll(raw"(?i)\b__asort\(", "array_sort(")
-      .replaceAll(raw"(?i)\b__encb\(", "encode(")
-  }
-
-  /** Round 10: the remaining ksqlDB JSON + date-arithmetic scalars.
-    *
-    * The JSON family rides Spark 4's VARIANT type: `from_json(s,
-    * 'map<string,variant>')` keeps each top-level value's full nested
-    * structure, and `to_json(variant)` re-serializes it — so
-    * JSON_CONCAT merges objects losslessly (later keys win, ksqlDB
-    * semantics via map_concat's last-wins) and JSON_RECORDS /
-    * JSON_ITEMS stringify values without flattening them to strings.
-    * JSON_ARRAY_CONTAINS compares serialized forms: the needle is
-    * rendered through `to_json(array(v))` with the brackets stripped,
-    * which yields exactly the serialization `to_json(variant)` gives
-    * the array elements (numbers bare, strings quoted).
-    *
-    * Date arithmetic: ksqlDB's DATEADD/DATESUB/TIMESTAMPADD/
-    * TIMESTAMPSUB take a TimeUnit IDENTIFIER (DAYS, HOURS, …); Spark's
-    * timestampadd wants the singular form. `__tsadd` breaks the
-    * rewriteCall fixpoint — Spark's own `timestampadd(` would re-match
-    * the case-insensitive TIMESTAMPADD scan on a second pass (the
-    * RewriteFuzzSpec idempotency invariant). SLICE is harder: ksqlDB
-    * SLICE(arr, from, to) is inclusive-end 1-based while Spark's
-    * slice(arr, start, length) takes a length — the same name with
-    * different semantics, so NO rewrite may ever emit the token
-    * `slice(` (a placeholder can't help: the final text would still
-    * re-trigger the scan). SLICE therefore expands to an indexed
-    * filter, and every other expansion that used to take array
-    * prefixes via slice (TOPK, n-LATEST_BY_OFFSET, HISTOGRAM) does
-    * too. */
-  private def expandJsonDatetime(sql: String): String = {
-    def vmap(a: String) = s"from_json($a, 'map<string,variant>')"
-    val s1 = rewriteCall(sql, "JSON_CONCAT") { args =>
-      if (args.length < 2) throw new IllegalArgumentException(
-        s"JSON_CONCAT expects at least 2 JSON strings, got ${args.length}")
-      s"to_json(map_concat(${args.map(vmap).mkString(", ")}))"
-    }
-    val s2 = rewriteCall(s1, "JSON_RECORDS") { args =>
-      arity("JSON_RECORDS", args, 1)
-      s"map_from_entries(transform(map_entries(${vmap(args.head)}), " +
-        "e -> struct(e.key, to_json(e.value))))"
-    }
-    val s3 = rewriteCall(s2, "JSON_ITEMS") { args =>
-      arity("JSON_ITEMS", args, 1)
-      s"transform(from_json(${args.head}, 'array<variant>'), x -> to_json(x))"
-    }
-    val s4 = rewriteCall(s3, "JSON_ARRAY_CONTAINS") { args =>
-      arity("JSON_ARRAY_CONTAINS", args, 2)
-      val (arr, v) = (args(0), args(1))
-      val needle = s"to_json(array($v))"
-      s"array_contains(transform(from_json($arr, 'array<variant>'), " +
-        s"x -> to_json(x)), substring($needle, 2, length($needle) - 2))"
-    }
-    // ksqlDB TimeUnit identifier → Spark's singular unit keyword
-    def unit(a: String): String = {
-      val u = a.trim.toUpperCase.stripSuffix("'").stripPrefix("'")
-      Map("MILLISECONDS" -> "MILLISECOND", "SECONDS" -> "SECOND",
-        "MINUTES" -> "MINUTE", "HOURS" -> "HOUR", "DAYS" -> "DAY",
-        "WEEKS" -> "WEEK", "MONTHS" -> "MONTH", "YEARS" -> "YEAR")
-        .getOrElse(u, u)
-    }
-    def addCall(args: Seq[String], neg: Boolean, toDate: Boolean): String = {
-      val n = if (neg) s"-(${args(1)})" else args(1)
-      val ts = if (toDate) s"CAST((${args(2)}) AS TIMESTAMP)" else args(2)
-      val call = s"__tsadd(${unit(args.head)}, $n, $ts)"
-      if (toDate) s"CAST($call AS DATE)" else call
-    }
-    val s5 = rewriteCall(s4, "TIMESTAMPADD") { args =>
-      arity("TIMESTAMPADD", args, 3); addCall(args, neg = false, toDate = false) }
-    val s6 = rewriteCall(s5, "TIMESTAMPSUB") { args =>
-      arity("TIMESTAMPSUB", args, 3); addCall(args, neg = true, toDate = false) }
-    val s7 = rewriteCall(s6, "DATEADD") { args =>
-      arity("DATEADD", args, 3); addCall(args, neg = false, toDate = true) }
-    val s8 = rewriteCall(s7, "DATESUB") { args =>
-      arity("DATESUB", args, 3); addCall(args, neg = true, toDate = true) }
-    // SLICE emits an indexed filter, NOT Spark's slice(start, length):
-    // the two share a case-insensitive name with different third-arg
-    // semantics, so a slice( in rewritten text would re-trigger this
-    // scan on the next pass (fuzz idempotency). The filter form is a
-    // fixpoint — and also where ksqlDB's inclusive-end contract lives.
-    val s9 = rewriteCall(s8, "SLICE") { args =>
-      arity("SLICE", args, 3)
-      val (a, f, t) = (args(0), args(1), args(2))
-      s"filter($a, (x, i) -> i + 1 BETWEEN ($f) AND ($t))"
-    }
-    // PARSE_TIMESTAMP / FORMAT_TIMESTAMP with the optional ksqlDB
-    // timezone argument: parse interprets the wall-clock string in tz,
-    // format renders the instant in tz. The tz forms follow the
-    // STRINGTOTIMESTAMP discipline — NTZ + convert_timezone + epoch
-    // arithmetic — so the result is independent of
-    // spark.sql.session.timeZone (a to_utc_/from_utc_timestamp pair
-    // is only correct when the session zone is UTC). The no-tz forms
-    // are plain renames: KSQL without a tz uses the server default
-    // zone, and the session zone is our server zone.
-    val ntzEpoch = "timestamp_ntz'1970-01-01 00:00:00'"
-    val s10 = rewriteCall(s9, "PARSE_TIMESTAMP") { args =>
-      if (args.length == 2) s"to_timestamp(${args(0)}, ${args(1)})"
-      else { arity("PARSE_TIMESTAMP", args, 3)
-        s"timestamp_millis(timestampdiff(MILLISECOND, $ntzEpoch, " +
-          s"convert_timezone(${args(2)}, 'UTC', " +
-          s"to_timestamp_ntz(${args(0)}, ${args(1)}))))" }
-    }
-    val s11 = rewriteCall(s10, "FORMAT_TIMESTAMP") { args =>
-      if (args.length == 2) s"date_format(${args(0)}, ${args(1)})"
-      else { arity("FORMAT_TIMESTAMP", args, 3)
-        // instant → UTC wall (NTZ, via epoch millis — a TIMESTAMP→NTZ
-        // cast would consult the session zone) → tz wall → format
-        s"date_format(convert_timezone('UTC', ${args(2)}, " +
-          s"__tsadd(MILLISECOND, unix_millis(${args(0)}), $ntzEpoch)), " +
-          s"${args(1)})" }
-    }
-    // ksqlDB 0.20 TIME scalars (round 18), carried on Spark 4.1's TIME
-    // type. FORMAT_TIME anchors the time on the epoch date and renders
-    // with date_format (Spark has no time_format); TIMEADD/TIMESUB ride
-    // the same anchor so a cross-midnight add wraps exactly like
-    // java.time LocalTime.plus (ksqlDB's implementation): day overflow
-    // lands in the date part and the cast back to TIME drops it.
-    // make_timestamp_ntz, not make_timestamp: the LTZ form consults the
-    // session zone, and TIMESTAMP → TIME casts are refused — only the
-    // NTZ wall-clock form casts back to TIME
-    val epochD = "date'1970-01-01'"
-    val s12 = rewriteCall(s11, "FORMAT_TIME") { args =>
-      arity("FORMAT_TIME", args, 2)
-      s"date_format(make_timestamp_ntz($epochD, ${args(0)}), ${args(1)})"
-    }
-    def timeAdd(args: Seq[String], neg: Boolean): String = {
-      // ksqlDB's TIMEADD is LocalTime.plus — it WRAPS at midnight.
-      // Spark 4.1 has no wrapping path: TIME + INTERVAL throws
-      // DATETIME_OVERFLOW past midnight, no timestamp→TIME cast
-      // exists, and make_time isn't registered. So shift the NTZ
-      // epoch-date anchor and re-parse the formatted time-of-day —
-      // the date part absorbs the overflow, which IS the wrap. All
-      // codegen'd string/datetime kernels; ~µs per row, scalar-linear.
-      val n = if (neg) s"-(${args(1)})" else args(1)
-      s"to_time(date_format(__tsadd(${unit(args.head)}, $n, " +
-        s"make_timestamp_ntz($epochD, ${args(2)})), 'HH:mm:ss.SSSSSS'), " +
-        "'HH:mm:ss.SSSSSS')"
-    }
-    val s13 = rewriteCall(s12, "TIMEADD") { args =>
-      arity("TIMEADD", args, 3); timeAdd(args, neg = false) }
-    val s14 = rewriteCall(s13, "TIMESUB") { args =>
-      arity("TIMESUB", args, 3); timeAdd(args, neg = true) }
-    s14.replaceAll(raw"(?i)\b__tsadd\(", "timestampadd(")
-  }
-
-  /** KSQL constructor syntax: ARRAY[a, b] → array(a, b) and
-    * MAP('k' := v, …) → map('k', v, …). ARRAY's brackets are matched
-    * with a quote-aware balanced scan; MAP only rewrites when a
-    * top-level `:=` is present (otherwise the call is already Spark's
-    * own map(...) and passes through). */
-  private def expandConstructors(sql: String): String = {
-    // ARRAY[ ... ] — rescans after each replacement, like rewriteCall
-    @annotation.tailrec
-    def arrays(s: String): String = {
-      val re = raw"(?i)\bARRAY\s*\[".r
-      re.findAllMatchIn(s).find(m => {
-        var in = false; var i = 0
-        while (i < m.start) { if (s.charAt(i) == '\'') in = !in; i += 1 }
-        !in
-      }) match {
-        case None => s
-        case Some(m) =>
-          var i = m.end; var depth = 1; var in = false
-          while (depth > 0 && i < s.length) {
-            val c = s.charAt(i)
-            if (c == '\'') in = !in
-            else if (!in && c == '[') depth += 1
-            else if (!in && c == ']') depth -= 1
-            i += 1
-          }
-          if (depth > 0) throw new IllegalArgumentException(
-            s"unbalanced brackets in ARRAY[…]: $s")
-          arrays(s.substring(0, m.start) +
-            "array(" + s.substring(m.end, i - 1) + ")" + s.substring(i))
-      }
-    }
-    // MAP(k := v, …) / STRUCT(f := v, …): a skip-forward scan (NOT
-    // rewriteCall — a passthrough MAP(..) would re-match the
-    // case-insensitive name and never terminate). Only calls with a
-    // top-level := rewrite. STRUCT's field names are bare identifiers
-    // on the KSQL side and string literals in Spark's named_struct.
-    def kvCalls(sql0: String, name: String, out: String,
-                key: String => String): String = {
-      var cur = sql0
-      var from = 0
-      val re = raw"(?i)\b$name\s*\(".r
-      var go = true
-      while (go) {
-        re.findAllMatchIn(cur).find(m => m.start >= from && {
-          var in = false; var i = 0
-          while (i < m.start) { if (cur.charAt(i) == '\'') in = !in; i += 1 }
-          !in
-        }) match {
-          case None => go = false
-          case Some(m) =>
-            var i = m.end; var depth = 1; var in = false
-            var argStart = m.end
-            val args = Seq.newBuilder[String]
-            while (depth > 0 && i < cur.length) {
-              val c = cur.charAt(i)
-              if (c == '\'') in = !in
-              else if (!in && c == '(') depth += 1
-              else if (!in && c == ')') { depth -= 1
-                if (depth == 0) { args += cur.substring(argStart, i).trim } }
-              else if (!in && c == ',' && depth == 1) {
-                args += cur.substring(argStart, i).trim; argStart = i + 1 }
-              i += 1
-            }
-            if (depth > 0) throw new IllegalArgumentException(
-              s"unbalanced parens in $name(…): $cur")
-            val as = args.result().filter(_.nonEmpty)
-            if (!as.exists(_.contains(":="))) from = m.end
-            else {
-              val kvs = as.map { a =>
-                val parts = a.split(":=", 2)
-                if (parts.length != 2) throw new IllegalArgumentException(
-                  s"$name entry needs key := value, got: $a")
-                s"${key(parts(0).trim)}, ${parts(1).trim}"
-              }
-              cur = cur.substring(0, m.start) + out + "(" +
-                kvs.mkString(", ") + ")" + cur.substring(i)
-              from = m.start + out.length + 1
-            }
-        }
-      }
-      cur
-    }
-    val withMaps = kvCalls(arrays(sql), "MAP", "map", identity)
-    kvCalls(withMaps, "STRUCT", "named_struct",
-      f => if (f.startsWith("'")) f else s"'${f.replace("'", "''")}'")
-  }
-
-  /** 1-arg LATEST_BY_OFFSET / EARLIEST_BY_OFFSET — KSQL's offset-implicit
-    * aggregate form — expands to max_by/min_by over ROWTIME: records
-    * arrive in offset order and ROWTIME (source event time, epoch
-    * millis) is the offset proxy. The translator materializes ROWTIME
-    * whenever the REWRITTEN statement mentions it, so the sugar works
-    * without the user naming ROWTIME anywhere.
-    *
-    * 2-arg with an INTEGER LITERAL is ksqlDB's N-latest form:
-    * LATEST_BY_OFFSET(x, 3) returns the 3 latest values as an array in
-    * ascending offset order (EARLIEST_: the 3 earliest). Expansion is
-    * one collect_list of (offset, value) structs, sorted and sliced —
-    * a single aggregate buffer per group. A 2-arg call whose second
-    * argument is an expression stays the explicit (value, ordering)
-    * max_by/min_by extension. */
-  private def expandLatest(sql: String): String = {
-    def nLatest(x: String, n: Int, latest: Boolean): String = {
-      // first/last-n as indexed filters — `slice(` must never appear in
-      // emitted text (the ksqlDB SLICE rewrite would re-match it; see
-      // expandTopK). The latest form keeps ascending offset order by
-      // filtering the tail in place instead of reverse/take/reverse.
-      val ts = s"transform(array_sort(collect_list(struct(ROWTIME AS o, $x AS v))), p -> p.v)"
-      if (latest) s"filter($ts, (x, i) -> i >= size($ts) - $n)"
-      else s"filter($ts, (x, i) -> i < $n)"
-    }
-    val s1 = rewriteCall(sql, "LATEST_BY_OFFSET") { args =>
-      if (args.length == 1) s"max_by(${args.head}, ROWTIME)"
-      else if (args.length == 2 && args(1).matches("\\d+"))
-        nLatest(args.head, args(1).toInt, latest = true)
-      else { arity("LATEST_BY_OFFSET", args, 2); s"max_by(${args.mkString(", ")})" }
-    }
-    rewriteCall(s1, "EARLIEST_BY_OFFSET") { args =>
-      if (args.length == 1) s"min_by(${args.head}, ROWTIME)"
-      else if (args.length == 2 && args(1).matches("\\d+"))
-        nLatest(args.head, args(1).toInt, latest = false)
-      else { arity("EARLIEST_BY_OFFSET", args, 2); s"min_by(${args.mkString(", ")})" }
-    }
-  }
-
-  /** Rewrite KSQL function names to Spark SQL equivalents. */
-  /** ksqlDB subscript semantics (round 16): `arr[i]` is ONE-indexed
-    * (a negative index counts from the end) and a missing array index
-    * or map key yields NULL — exactly Spark's `try_element_at` — while
-    * Spark's own `[ ]` is 0-indexed and errors under ANSI. Runs after
-    * expandConstructors, so every surviving `[` following an
-    * identifier, `)` or `]` is a subscript; each rewrites to
-    * `try_element_at(primary, idx)`, rescanning so chains
-    * (`m['a']['b']`, `split(x, ',')[2]`) nest inside-out. Quote-aware
-    * and whitespace-tolerant (the statement parser spaces its tokens).
-    * The primary walk-back covers identifier/dotted chains and one
-    * balanced call/group; subscripting a bare CASE…END needs parens
-    * (fails loud at Spark's parser, never silently). */
-  private def indexAccess(sql: String): String = {
-    def once(s: String): Option[String] = {
-      val n = s.length
-      val inStr = new Array[Boolean](n)
-      val open = new Array[Int](n)
-      val stack = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var in = false
-      var i = 0
-      while (i < n) {
+      def dot(): Unit = { dotted = primary; primary = -1; out.append('.') }
+      def other(text: String): Unit = { primary = -1; dotted = -1; out.append(text) }
+      while (i < s.length && !stops.contains(s.charAt(i)) &&
+          !(assign && at(i, ':') && at(i + 1, '='))) {
         val c = s.charAt(i)
-        if (c == '\'') in = !in
-        inStr(i) = in
-        if (!in) {
-          if (c == '(' || c == '[') stack += i
-          else if (c == ')' || c == ']') {
-            if (stack.isEmpty) throw new IllegalArgumentException(
-              s"unbalanced '$c' in: $s")
-            open(i) = stack.remove(stack.size - 1)
+        val start = out.length
+        if (c.isWhitespace) { out.append(c); i += 1 }
+        else if (c == '\'') {
+          val from = i
+          i += 1
+          while (i < s.length && !(at(i, '\'') && !at(i + 1, '\'')))
+            i += (if (at(i, '\'')) 2 else 1)
+          i = math.min(i + 1, s.length)
+          other(s.substring(from, i))
+        } else if (isIdent(i)) {
+          val from = i
+          while (isIdent(i)) i += 1
+          val word = s.substring(from, i)
+          var j = i
+          while (j < s.length && s.charAt(j).isWhitespace) j += 1
+          if (at(j, '(')) {
+            val gap = s.substring(i, j)
+            val qualified = dotted >= 0
+            i = j + 1
+            atom(start, call(word, gap, qualified))
+          } else if (at(j, '[') && word.equalsIgnoreCase("ARRAY")) {
+            i = j + 1
+            val items = seq("]", assign = false)
+            expect(']')
+            atom(start, s"array($items)")
+          } else atom(start, if (word.equalsIgnoreCase("VARCHAR")) "STRING" else word)
+        } else if (c == '(') {
+          i += 1
+          val inner = seq(")", assign = false)
+          expect(')')
+          atom(start, s"($inner)")
+        } else if (c == '[') {
+          i += 1
+          val inner = seq("]", assign = false)
+          expect(']')
+          if (primary < 0) other(s"[$inner]")
+          else {
+            val target = out.substring(primary).trim
+            out.setLength(primary)
+            // the subscripted call is itself a primary: chains nest
+            atom(primary, s"try_element_at($target, ${inner.trim})")
           }
+        } else if (c == '=' && at(i + 1, '>') && !at(i - 1, '<')) {
+          i += 2; other("->")
+        } else if (c == '-' && at(i + 1, '>') &&
+            (isIdent(i - 1) || at(i - 1, ']') || at(i - 1, ')')) &&
+            i + 2 < s.length && (s.charAt(i + 2).isLetter || s.charAt(i + 2) == '_')) {
+          i += 2; dot()
+        } else if (c == '.') { i += 1; dot() }
+        else { i += 1; other(c.toString) }
+      }
+      out.toString
+    }
+
+    /** After `name(`: the arguments through `)`, and the call's text. */
+    private def call(name: String, gap: String, qualified: Boolean): String = {
+      val args = Seq.newBuilder[(String, Option[String])] // (arg, value after :=)
+      var more = true
+      while (more) {
+        val key = seq(",)", assign = true)
+        val value =
+          if (at(i, ':')) { i += 2; Some(seq(",)", assign = false)) } else None
+        args += key -> value
+        if (at(i, ',')) i += 1 else { expect(')'); more = false }
+      }
+      val as = args.result()
+      val verbatim = as.map { case (k, v) => k + v.fold("")(":=" + _) }
+      val up = name.toUpperCase(java.util.Locale.ROOT)
+      if ((up == "MAP" || up == "STRUCT") && as.exists(_._2.isDefined)) {
+        val kvs = as.filterNot { case (k, v) => k.trim.isEmpty && v.isEmpty }.map {
+          case (k, Some(v)) => (k.trim, v.trim)
+          case (k, None) => throw new IllegalArgumentException(
+            s"$name entry needs key := value, got: ${k.trim}")
         }
-        i += 1
-      }
-      def prevNonSpace(k: Int): Int = {
-        var j = k
-        while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-        j
-      }
-      // first subscript '[': preceded (over spaces) by an identifier
-      // char, ')' or ']'
-      var found = -1
-      i = 0
-      while (found < 0 && i < n) {
-        if (s.charAt(i) == '[' && !inStr(i)) {
-          val j = prevNonSpace(i - 1)
-          if (j >= 0 && !inStr(j)) {
-            val p = s.charAt(j)
-            if (p.isLetterOrDigit || p == '_' || p == ')' || p == ']')
-              found = i
+        if (up == "MAP") kvs.map { case (k, v) => s"$k, $v" }.mkString("map(", ", ", ")")
+        else kvs.map { case (f, v) =>
+          val field = if (f.startsWith("'")) f else s"'${f.replace("'", "''")}'"
+          s"$field, $v"
+        }.mkString("named_struct(", ", ", ")")
+      } else KsqlFunctions.dialectFunction(name).filter(_ => !qualified) match {
+        case Some(f) =>
+          val unitQuoted = verbatim match {
+            case u +: rest if f.timeUnitArg && u.trim.matches("[A-Za-z_][A-Za-z0-9_]*") =>
+              s"'${u.trim}'" +: rest
+            case other => other
           }
-        }
-        i += 1
+          s"${KsqlFunctions.sqlName(f)}$gap(${unitQuoted.mkString(",")})"
+        case None => s"$name$gap(${verbatim.mkString(",")})"
       }
-      if (found < 0) return None
-      // matching ']'
-      var depth = 0; var k = found; var close = -1
-      while (close < 0 && k < n) {
-        if (!inStr(k)) {
-          val c = s.charAt(k)
-          if (c == '[' || c == '(') depth += 1
-          else if (c == ']' || c == ')') { depth -= 1
-            if (depth == 0) close = k }
-        }
-        k += 1
-      }
-      if (close < 0) throw new IllegalArgumentException(
-        s"unbalanced subscript in: $s")
-      // primary start: identifier/dotted chain, jumping over ONE
-      // balanced () / [] group per hop (call args, a chained subscript,
-      // or a parenthesized group)
-      var start = prevNonSpace(found - 1)
-      var scanning = true
-      while (scanning && start >= 0) {
-        val p = s.charAt(start)
-        if (!inStr(start) && (p == ')' || p == ']')) {
-          start = open(start) - 1
-          // a call's name (or a chained primary) may precede the group
-          val j = prevNonSpace(start)
-          if (j >= 0 && !inStr(j) && { val q = s.charAt(j)
-            q.isLetterOrDigit || q == '_' || q == ']' || q == ')' })
-            start = j
-          else scanning = false
-        } else if (p.isLetterOrDigit || p == '_') {
-          while (start >= 0 && { val q = s.charAt(start)
-            q.isLetterOrDigit || q == '_' }) start -= 1
-          // continue only through a (possibly spaced) dot
-          val j = prevNonSpace(start)
-          if (j >= 0 && !inStr(j) && s.charAt(j) == '.') {
-            start = prevNonSpace(j - 1)
-          } else scanning = false
-        } else scanning = false
-      }
-      val pStart = {
-        // start sits one before the primary (or at -1); re-trim spaces
-        var b = start + 1
-        while (b < found && s.charAt(b).isWhitespace) b += 1
-        b
-      }
-      val primary = s.substring(pStart, prevNonSpace(found - 1) + 1)
-      val idx = s.substring(found + 1, close).trim
-      Some(s.substring(0, pStart) + "try_element_at(" + primary + ", " +
-        idx + ")" + s.substring(close + 1))
     }
-    var cur = sql
-    var more = true
-    while (more) once(cur) match {
-      case Some(next) => cur = next
-      case None => more = false
-    }
-    cur
-  }
-
-  def rewriteExpr(e: String): String = {
-    // expandConstructors BEFORE expandLambdas: rewriteCall's arg scan
-    // tracks parens and quotes but not square brackets, so a TRANSFORM
-    // over an ARRAY[1, 2] literal would mis-split at the bracketed
-    // commas — once constructors have become array(1, 2) the commas sit
-    // at depth 2 and split correctly. indexAccess right after: the only
-    // brackets left are subscripts, and rewriting them to
-    // try_element_at removes brackets from every later expansion's
-    // scan entirely.
-    val expanded = expandBytesEntries(expandLatest(expandUrl(expandField(
-      expandGeo(expandTimeFns(
-      expandTopK(expandHistogram(expandMask(expandJsonDatetime(expandArrayJson(
-        expandLambdas(indexAccess(expandConstructors(
-          lambdaArrows(structDeref(e))))))))))))))))
-    // plain renames are quote-aware too: a match starting inside a
-    // single-quoted literal must survive verbatim (same rule as
-    // rewriteCall; '' escapes toggle twice and net out)
-    val renamed = fnRename.foldLeft(expanded) { case (acc, (k, v)) =>
-      val re = s"(?i)\\b$k\\s*\\(".r
-      val sb = new StringBuilder
-      var last = 0; var in = false
-      for (m <- re.findAllMatchIn(acc)) {
-        var i = last
-        while (i < m.start) { if (acc.charAt(i) == '\'') in = !in; i += 1 }
-        sb.append(acc.substring(last, m.start))
-        sb.append(if (in) m.matched else s"$v(")
-        // advance quote state across the matched span (no quotes can
-        // appear in `name\s*(`, but keep the scan honest anyway)
-        while (i < m.end) { if (acc.charAt(i) == '\'') in = !in; i += 1 }
-        last = m.end
-      }
-      sb.append(acc.substring(last))
-      sb.toString
-    }
-    // ksqlDB's string type is bare VARCHAR; Spark's varchar demands a
-    // length, so CAST(x AS VARCHAR) — the canonical ksqlDB cast — was
-    // an analysis error. Rewrite the bare type token to STRING
-    // (quote-aware); an explicit VARCHAR(n) passes through to Spark's
-    // own sized varchar. Idempotent: STRING re-matches nothing.
-    replaceTypeToken(renamed, "VARCHAR", "STRING")
-  }
-
-  /** Quote-aware whole-word token replace, skipping `word(` call forms
-    * — the type-token analogue of the fnRename scan. */
-  private def replaceTypeToken(sql: String, from: String, to: String)
-  : String = {
-    val re = s"(?i)\\b$from\\b(?!\\s*\\()".r
-    val sb = new StringBuilder
-    var last = 0; var in = false
-    for (m <- re.findAllMatchIn(sql)) {
-      var i = last
-      while (i < m.start) { if (sql.charAt(i) == '\'') in = !in; i += 1 }
-      sb.append(sql.substring(last, m.start))
-      sb.append(if (in) m.matched else to)
-      last = m.end
-    }
-    sb.append(sql.substring(last))
-    sb.toString
   }
 
   /** The streaming output mode a statement's EMIT clause implies:
@@ -2030,7 +1159,7 @@ object Translator {
                 java.util.regex.Matcher.quoteReplacement(name))
         case _ => ()
       }
-      if (raw"(?i)\b(count|sum|avg|min|max|collect_list|collect_set|topk)\s*\("
+      if (raw"(?i)\b(?:ksql_)?(count|sum|avg|min|max|collect_list|collect_set|topk)\s*\("
           .r.findFirstIn(t).isDefined)
         throw new IllegalArgumentException(
           "HAVING over a table-changelog aggregate must reference the " +
@@ -2277,13 +1406,12 @@ object Translator {
     //   SET 'ksql.star.pseudocolumns' = 'true';
     // ROWTIME is the source's event time in epoch millis; ROWKEY is the
     // WITH(KEY='col') column. They resolve on the PRIMARY source (join
-    // sides use their own column names). The mention scan runs over the
-    // REWRITTEN expression texts so sugar that expands to ROWTIME —
-    // 1-arg LATEST_BY_OFFSET(x) → max_by(x, ROWTIME) — triggers the
-    // materialization too.
+    // sides use their own column names). LATEST_BY_OFFSET and
+    // EARLIEST_BY_OFFSET order by ROWTIME without naming it, so calling
+    // them materializes it too.
     def stmtMentions(name: String): Boolean = {
-      val re = ("(?i)\\b" + name + "\\b").r
-      def in(x: String) = re.findFirstIn(rewriteExpr(x)).isDefined
+      val re = ("(?i)\\b(?:" + name + ")\\b").r
+      def in(x: String) = re.findFirstIn(x).isDefined
       s.columns.exists(c => in(c._1)) || s.where.exists(in) ||
         s.groupBy.exists(in) || s.having.exists(in) ||
         s.orderBy.exists(o => in(o._1)) || s.partitionBy.exists(in) ||
@@ -2293,7 +1421,7 @@ object Translator {
       propsFor(spark).get("ksql.star.pseudocolumns").exists(_.equalsIgnoreCase("true")) &&
         s.columns.exists(_._1.trim == "*") && s.groupBy.isEmpty && s.window.isEmpty
     val withRowtime =
-      if ((stmtMentions("ROWTIME") || starPseudo) &&
+      if ((stmtMentions("ROWTIME|LATEST_BY_OFFSET|EARLIEST_BY_OFFSET") || starPseudo) &&
           !based.columns.exists(_.equalsIgnoreCase("rowtime")))
         based.withColumn("rowtime", unix_millis(col(src.timeColumn)))
       else based
@@ -3074,24 +2202,15 @@ object Translator {
         (catalog, Some(rows.toDF("property", "value")))
       case DescribeFunction(name) =>
         import spark.implicits._
-        val n = name.toUpperCase
-        val desc: Option[(String, String, String)] =
-          fnRename.get(n).map(v => (n, "rename", s"maps to Spark `$v`"))
-            .orElse(expansionFns.get(n).map(u => (n, "expansion", u)))
-            .orElse(graft.GraftExtensions.definitions
-              .find(_._1.equalsIgnoreCase(n))
-              .map { case (fn, info, _) => (n, "native codegen", info.getUsage) })
-        val row = desc.getOrElse(throw new IllegalArgumentException(
-          s"unknown function $name"))
-        (catalog, Some(Seq(row).toDF("function", "kind", "usage")))
+        val f = graft.GraftExtensions.functions.find(_.name.equalsIgnoreCase(name))
+          .getOrElse(throw new IllegalArgumentException(s"unknown function $name"))
+        (catalog, Some(Seq((name.toUpperCase, f.kind, f.usage))
+          .toDF("function", "kind", "usage")))
       case ShowFunctions =>
         import spark.implicits._
-        val renames = fnRename.toSeq.map { case (k, v) => (k, v) }
-        val expansions = expansionFns.keys.toSeq.map(n => (n, "(expansion)"))
-        val native = graft.GraftExtensions.definitions
-          .map { case (n, _, _) => (n.toUpperCase, s"native $n") }
-        val rows = (renames ++ expansions ++ native).sortBy(_._1)
-        (catalog, Some(rows.toDF("function", "maps_to")))
+        val rows = graft.GraftExtensions.functions
+          .map(f => (f.name.toUpperCase, f.kind, f.usage)).sortBy(_._1)
+        (catalog, Some(rows.toDF("function", "kind", "usage")))
       case Terminate(id) =>
         val targets =
           if (id.equalsIgnoreCase("ALL")) spark.streams.active.toSeq

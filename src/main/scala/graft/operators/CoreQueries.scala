@@ -2,8 +2,7 @@ package graft.operators
 
 import graft.Materialize.MaterializeOps
 import graft.{Q, Tables}
-import graft.functions.KsqlFunctions._
-import graft.functions.{KsqlFunctions => KF}
+import graft.functions.KsqlFunctions.{call => ksql}
 import org.apache.spark.sql.functions._
 import graft.Rounding.round // engine-identical rounding — shadows functions.round (see Rounding)
 
@@ -98,7 +97,7 @@ object CoreQueries {
       (s, d) => Tables.events(s, d).select(
         col("event_id"),
         floor(col("value")).cast("long").as("value_int"),
-        ifNull(nullif(col("event_type"), lit("error")), lit("unknown")).as("etype")),
+        coalesce(nullif(col("event_type"), lit("error")), lit("unknown")).as("etype")),
       """SELECT event_id, CAST(floor(value) AS BIGINT) AS value_int,
         |  coalesce(nullif(event_type, 'error'), 'unknown') AS etype
         |FROM events""".stripMargin),
@@ -198,12 +197,12 @@ object CoreQueries {
     "q_scalar_string" -> Q(
       (s, d) => Tables.documents(s, d).select(
         col("doc_id"),
-        KF.ucase(ksqlSubstring(col("text"), 1, 10)).as("head_upper"),
-        KF.lcase(col("source")).as("source_lower"),
-        KF.len(col("text")).as("text_len"),
-        ksqlConcat(col("lang"), lit("-"), col("source")).as("lang_source"),
-        ksqlReplace(col("lang"), "en", "EN").as("lang_repl"),
-        size(ksqlSplit(col("text"), " ")).as("n_tokens")),
+        upper(substring(col("text"), 1, 10)).as("head_upper"),
+        lower(col("source")).as("source_lower"),
+        length(col("text")).as("text_len"),
+        concat(col("lang"), lit("-"), col("source")).as("lang_source"),
+        replace(col("lang"), lit("en"), lit("EN")).as("lang_repl"),
+        size(ksql("SPLIT", col("text"), lit(" "))).as("n_tokens")),
       """SELECT doc_id, upper(substring(text, 1, 10)) AS head_upper,
         |  lower(source) AS source_lower, length(text) AS text_len,
         |  lang || '-' || source AS lang_source,
@@ -214,11 +213,11 @@ object CoreQueries {
     "q_mask" -> Q(
       (s, d) => Tables.customer(s, d).select(
         col("c_custkey"),
-        KF.mask(col("c_name")).as("masked"),
-        maskLeft(col("c_name"), 3).as("mask_left3"),
-        maskRight(col("c_name"), 3).as("mask_right3"),
-        maskKeepLeft(col("c_name"), 5).as("keep_left5"),
-        maskKeepRight(col("c_name"), 4).as("keep_right4")),
+        ksql("MASK", col("c_name")).as("masked"),
+        ksql("MASK_LEFT", col("c_name"), lit(3)).as("mask_left3"),
+        ksql("MASK_RIGHT", col("c_name"), lit(3)).as("mask_right3"),
+        ksql("MASK_KEEP_LEFT", col("c_name"), lit(5)).as("keep_left5"),
+        ksql("MASK_KEEP_RIGHT", col("c_name"), lit(4)).as("keep_right4")),
       """SELECT c_custkey,
         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(c_name,'[^A-Za-z0-9]','-','g'),'[A-Z]','X','g'),'[a-z]','x','g'),'[0-9]','n','g') AS masked,
         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(substring(c_name,1,3),'[^A-Za-z0-9]','-','g'),'[A-Z]','X','g'),'[a-z]','x','g'),'[0-9]','n','g')
@@ -239,11 +238,11 @@ object CoreQueries {
     "q_scalar_math" -> Q(
       (s, d) => Tables.lineitem(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
-        ksqlAbs(col("l_quantity") - 25).as("abs_qty_dev"),
-        ksqlCeil(col("l_extendedprice") / 1000).cast("long").as("price_k_ceil"),
-        ksqlFloor(col("l_extendedprice") / 1000).cast("long").as("price_k_floor"),
-        ksqlRound(col("l_discount") * 100, 0).cast("long").as("disc_pct"),
-        round(ksqlSqrt(col("l_extendedprice")), 3).as("price_sqrt")),
+        abs(col("l_quantity") - 25).as("abs_qty_dev"),
+        ceil(col("l_extendedprice") / 1000).cast("long").as("price_k_ceil"),
+        floor(col("l_extendedprice") / 1000).cast("long").as("price_k_floor"),
+        round(col("l_discount") * 100, 0).cast("long").as("disc_pct"),
+        round(sqrt(col("l_extendedprice")), 3).as("price_sqrt")),
       """SELECT l_orderkey, l_linenumber,
         |  abs(l_quantity - 25) AS abs_qty_dev,
         |  CAST(ceil(l_extendedprice / 1000) AS BIGINT) AS price_k_ceil,
@@ -255,14 +254,15 @@ object CoreQueries {
     "q_extract_json" -> Q(
       (s, d) => Tables.events(s, d).select(
         col("event_id"),
-        extractJsonField(col("props"), "$.k").cast("long").as("k")),
+        ksql("EXTRACTJSONFIELD", col("props"), lit("$.k")).cast("long").as("k")),
       """SELECT event_id, CAST(props->>'$.k' AS BIGINT) AS k FROM events""".stripMargin),
 
     "q_time_format" -> Q(
       (s, d) => Tables.events(s, d).select(
         col("event_id"),
-        timestampToString(unix_millis(col("ts")), "yyyy-MM-dd HH:mm").as("ts_str"),
-        dateToString(col("ts"), "yyyy-MM-dd").as("day_str"),
+        ksql("TIMESTAMPTOSTRING", unix_millis(col("ts")), lit("yyyy-MM-dd HH:mm"))
+          .as("ts_str"),
+        ksql("DATETOSTRING", col("ts"), lit("yyyy-MM-dd")).as("day_str"),
         hour(col("ts")).as("hr")),
       """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M') AS ts_str,
         |  strftime(ts, '%Y-%m-%d') AS day_str,
@@ -272,10 +272,10 @@ object CoreQueries {
     "q_geo_distance" -> Q(
       (s, d) => Tables.customer(s, d).select(
         col("c_custkey"),
-        round(geoDistance(
+        round(ksql("GEO_DISTANCE",
           (col("c_custkey") % 90).cast("double"), (col("c_custkey") % 180).cast("double"),
           (col("c_nationkey") % 90).cast("double"), ((col("c_nationkey") * 7) % 180).cast("double"),
-          "KM"), 3).as("dist_km")),
+          lit("KM")), 3).as("dist_km")),
       """SELECT c_custkey,
         |  round(2 * 6371 * asin(sqrt(least(
         |    pow(sin(radians(CAST(c_nationkey % 90 AS DOUBLE) - CAST(c_custkey % 90 AS DOUBLE)) / 2), 2)
@@ -287,7 +287,8 @@ object CoreQueries {
     "q_array_contains" -> Q(
       (s, d) => Tables.documents(s, d).select(
         col("doc_id"),
-        arrayContains(ksqlSplit(col("text"), " "), "spark").as("has_spark")),
+        ksql("ARRAYCONTAINS", ksql("SPLIT", col("text"), lit(" ")), lit("spark"))
+          .as("has_spark")),
       """SELECT doc_id, list_contains(string_split(text, ' '), 'spark') AS has_spark
         |FROM documents""".stripMargin),
 

@@ -351,7 +351,6 @@ object JoinQueries {
     // the plan the guard enforces everywhere.
     "q_geo_join" -> Q(
       (s, d) => {
-        import graft.functions.KsqlFunctions.geoDistance
         val cust = Tables.customer(s, d).select(col("c_custkey"),
           ((col("c_custkey") % 100) / 2.0 - 20.0).as("c_lat"),
           ((col("c_custkey") % 160) / 2.0 - 40.0).as("c_lon"))
@@ -366,8 +365,8 @@ object JoinQueries {
           .withColumn("cell_lat", floor(col("c_lat")) + col("dlat"))
           .withColumn("cell_lon", floor(col("c_lon")) + col("dlon"))
         probes.join(broadcast(supp), Seq("cell_lat", "cell_lon"))
-          .withColumn("km", geoDistance(col("c_lat"), col("c_lon"),
-            col("s_lat"), col("s_lon"), "KM"))
+          .withColumn("km", graft.functions.KsqlFunctions.call("GEO_DISTANCE",
+            col("c_lat"), col("c_lon"), col("s_lat"), col("s_lon"), lit("KM")))
           .filter(col("km") <= 100.0)
           .groupBy(col("c_custkey"))
           .agg(count(lit(1)).as("n_nearby"),

@@ -13,9 +13,11 @@ import org.apache.spark.sql.Row
   * the batch path uses — one operator implementation, two execution modes.
   *
   * Scale: state stores are bounded by watermarks everywhere state exists
-  * (windowed aggs, stream-stream joins, dedup). Shuffle partitioning for
-  * stateful ops follows spark.sql.shuffle.partitions — size it to the
-  * cluster; state is per-key-partition and redistributes on repartition.
+  * (windowed aggs, stream-stream joins, dedup). Stateful ops partition
+  * their state by spark.sql.shuffle.partitions as set when the query
+  * FIRST starts: that count is written into the checkpoint, and a
+  * restart from the checkpoint keeps it whatever the conf says later.
+  * Size it to the cluster before the first start.
   */
 final case class KsqlStream(df: DataFrame, timeColumn: String = "ts",
                             watermark: String = "10 minutes") {

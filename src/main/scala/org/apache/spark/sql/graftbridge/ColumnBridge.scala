@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Bridge into the `private[sql]` Column<->Expression converters (Spark 4
   * backs Column with ColumnNode, so library code can no longer construct
@@ -12,4 +12,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** The Column's expression tree now (`expression` defers the
+    * conversion to analysis), so a literal argument reads as a Literal. */
+  def converted(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }

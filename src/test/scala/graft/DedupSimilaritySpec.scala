@@ -350,9 +350,14 @@ class DedupSimilaritySpec extends SparkSpec {
       array_distinct(expr(
         """transform(sequence(1, greatest(size(split(text, ' ')) - 2, 1)),
           |  i -> concat_ws(' ', slice(split(text, ' '), i, 3)))""".stripMargin)).as("s"))
+    // reference HOF formulation: k folds over the hashed shingles
+    val hashes = transform(col("s"), s => TextFunctions.stableHash32(s))
+    val minhashSignatureHof = transform(sequence(lit(0), lit(15)), j =>
+      aggregate(hashes, lit(Long.MaxValue),
+        (acc, x) => least(acc, ((lit(2L) * j + 1L) * x + j * 12345L + 7L) % 2147483647L)))
     val both = sh.select(
       TextFunctions.minhashSignature(col("s")).as("native"),
-      TextFunctions.minhashSignatureHof(col("s")).as("hof"))
+      minhashSignatureHof.as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
   }
 
@@ -374,9 +379,11 @@ class DedupSimilaritySpec extends SparkSpec {
     import graft.functions.VectorFunctions
     val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val paired = v.as("a").join(v.as("b"), col("a.vec_id") === col("b.vec_id") - 1)
+    // reference HOF formulation: a left fold over the pairwise products
+    val dotHof = aggregate(zip_with(col("a.v"), col("b.v"), (x, y) => x * y),
+      lit(0.0), (acc, x) => acc + x)
     val diff = paired.select(
-      (VectorFunctions.dot(col("a.v"), col("b.v"))
-        - VectorFunctions.dotHof(col("a.v"), col("b.v"))).as("d"))
+      (VectorFunctions.dot(col("a.v"), col("b.v")) - dotHof).as("d"))
       .filter(col("d") =!= 0.0).count()
     assert(diff == 0)
   }

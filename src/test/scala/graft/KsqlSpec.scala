@@ -5,6 +5,23 @@ import org.apache.spark.sql.functions._
 
 class KsqlSpec extends SparkSpec {
 
+  /** Dialect expressions evaluated through Translator.run over one row
+    * whose columns the inputs name. */
+  private def dialectRow(exprs: String*): org.apache.spark.sql.Row =
+    dialectRowOver(
+      """SELECT 'Ab1.x' AS name, '{"k": 7}' AS props,
+        |  TIMESTAMP '2024-01-01 00:00:00' AS ts, array(3, 1, 2) AS a,
+        |  map(1, 10, 22, 20) AS m, 'k1=v1;k2=v2' AS s, 'hi' AS x""".stripMargin)(
+      exprs: _*)
+  private def dialectRowOver(source: String)(exprs: String*)
+  : org.apache.spark.sql.Row = {
+    val cat: Translator.Catalog = Map("one" -> Translator.Source(spark.sql(source), "id"))
+    val (_, Some(df)) = Translator.run(spark, cat, exprs.zipWithIndex
+      .map { case (e, i) => s"$e AS c$i" }.mkString("SELECT ", ", ", " FROM one"))
+      : @unchecked
+    df.head
+  }
+
   test("GraftExtensions registers native expressions as SQL functions") {
     GraftExtensions.register(spark)
     val r = spark.sql(
@@ -348,11 +365,12 @@ class KsqlSpec extends SparkSpec {
   }
 
   test("FROM_UNIXTIME / UNIX_TIMESTAMP expand to millis-preserving forms") {
-    val r = Translator.rewriteExpr("FROM_UNIXTIME(1704067200000)")
-    assert(r == "timestamp_millis(1704067200000)")
-    assert(Translator.rewriteExpr("UNIX_TIMESTAMP()")
-      == "unix_millis(current_timestamp())")
-    assert(Translator.rewriteExpr("UNIX_TIMESTAMP(ts)") == "unix_millis(ts)")
+    val before = System.currentTimeMillis()
+    val r = dialectRow("FROM_UNIXTIME(1704067200000)", "UNIX_TIMESTAMP()",
+      "UNIX_TIMESTAMP(ts)")
+    assert(r.getTimestamp(0).getTime == 1704067200000L)
+    assert(r.getLong(1) >= before && r.getLong(1) <= System.currentTimeMillis())
+    assert(r.getLong(2) == 1704067200000L)
   }
 
   test("IF NOT EXISTS keeps an existing binding; OR REPLACE rebinds fresh") {
@@ -472,18 +490,15 @@ class KsqlSpec extends SparkSpec {
   }
 
   test("function rewrite maps KSQL names to Spark") {
-    val r = Translator.rewriteExpr("UCASE(SUBSTRING(name, 1, 3))")
-    assert(r == "upper(substring( name , 1 , 3 ))"
-      || r.replaceAll("\\s", "") == "upper(substring(name,1,3))")
-    assert(Translator.rewriteExpr("EXTRACTJSONFIELD(props, '$.k')")
-      .startsWith("get_json_object"))
-    assert(Translator.rewriteExpr("MASK(name)").contains("regexp_replace"))
+    val r = dialectRow("UCASE(SUBSTRING(name, 1, 3))",
+      "EXTRACTJSONFIELD(props, '$.k')", "MASK(name)")
+    assert(r.getString(0) == "AB1")
+    assert(r.getString(1) == "7")
+    assert(r.getString(2) == "Xxn-x")
   }
 
   test("ksqlDB lambda arrows land on Spark HOFs; map TRANSFORM sees original entries") {
-    // `=>` → `->`, names pass through to Spark's native transform/filter/reduce
-    val r = Translator.rewriteExpr("TRANSFORM(a, x => x + 1)")
-    assert(r.replaceAll("\\s", "") == "transform(a,x->x+1)")
+    // `=>` → `->`; FILTER/REDUCE are Spark's own HOFs and keep their name
     // zero-space lambda survives (deref would claim `x->x`; `=>` must not)
     assert(Translator.rewriteExpr("FILTER(a, x=>x>2)")
       .replaceAll("\\s", "") == "FILTER(a,x->x>2)")
@@ -491,25 +506,22 @@ class KsqlSpec extends SparkSpec {
     assert(Translator.rewriteExpr("a <=> b") == "a <=> b")
     // `=>` inside a string literal survives
     assert(Translator.rewriteExpr("CONCAT(s, 'a => b')") contains "'a => b'")
-    // 3-arg map TRANSFORM: one map_entries pass, both lambdas over the
-    // ORIGINAL (k, v) — idempotent under a second rewrite
+    val r = dialectRow("TRANSFORM(a, x => x + 1)",
+      // 3-arg map TRANSFORM: both lambdas see the ORIGINAL (k, v)
+      "TRANSFORM(m, (k, v) => UCASE(k), (k, v) => v + LENGTH(k))",
+      // ARRAY[...] constructor literals inside HOF args: the bracketed
+      // commas are not argument separators
+      "TRANSFORM(ARRAY[1, 2, 3], x => x + 1)",
+      // params named `key`/`value` do not corrupt the entry references
+      "TRANSFORM(m, (x, key) => x + key, (k, v) => v)")
+    assert(r.getSeq[Int](0) == Seq(4, 2, 3))
+    assert(r.getMap[String, Int](1) == Map("1" -> 11, "22" -> 22))
+    assert(r.getSeq[Int](2) == Seq(2, 3, 4))
+    assert(r.getMap[Int, Int](3) == Map(11 -> 10, 42 -> 20))
+    // the rewrite of the 3-arg form is idempotent
     val m = Translator.rewriteExpr(
       "TRANSFORM(m, (k, v) => UCASE(k), (k, v) => v + LENGTH(k))")
-    assert(m.replaceAll("\\s", "") ==
-      "map_from_entries(transform(map_entries(m)," +
-        "__e->struct(upper(__e.key),__e.value+LENGTH(__e.key))))")
     assert(Translator.rewriteExpr(m) == m)
-    // ARRAY[...] constructor literals inside HOF args: the bracketed
-    // commas must not be mis-split as argument separators (constructors
-    // rewrite before the lambda pass)
-    assert(Translator.rewriteExpr("TRANSFORM(ARRAY[1, 2, 3], x => x + 1)")
-      .replaceAll("\\s", "") == "transform(array(1,2,3),x->x+1)")
-    // params named `key`/`value` must not corrupt the injected refs
-    // (single-pass substitution; sequential passes would rewrite the
-    // `key` inside an earlier `__e.key`)
-    assert(Translator.rewriteExpr(
-      "TRANSFORM(m, (x, key) => x + key, (k, v) => v)")
-      .replaceAll("\\s", "").contains("struct(__e.key+__e.value,__e.value)"))
     // execution: dialect result equals the Spark-native formulation
     import org.apache.spark.sql.functions._
     val df = spark.range(1, 6).toDF("n")
@@ -527,17 +539,16 @@ class KsqlSpec extends SparkSpec {
   }
 
   test("ksqlDB array/JSON family: ARRAY_SORT direction, IS_JSON_STRING, renames") {
-    assert(Translator.rewriteExpr("ARRAY_SORT(a)")
-      .replaceAll("\\s", "") == "array_sort(a)")
-    assert(Translator.rewriteExpr("ARRAY_SORT(a, 'DESC')")
-      .replaceAll("\\s", "") == "reverse(sort_array(a))")
-    assert(Translator.rewriteExpr("ARRAY_SORT(a, 'ASC')")
-      .replaceAll("\\s", "") == "array_sort(a)")
-    // Spark's own comparator-lambda form passes through untouched
-    assert(Translator.rewriteExpr("array_sort(a, (l, r) -> 1)")
-      .replaceAll("\\s", "") == "array_sort(a,(l,r)->1)")
-    assert(Translator.rewriteExpr("SPLIT_TO_MAP(s, ';', '=')")
-      .startsWith("str_to_map"))
+    val sorted = dialectRow("ARRAY_SORT(a)", "ARRAY_SORT(a, 'DESC')",
+      "ARRAY_SORT(a, 'ASC')",
+      // Spark's own comparator-lambda form keeps Spark's meaning
+      "array_sort(a, (l, r) -> 1)",
+      "SPLIT_TO_MAP(s, ';', '=')")
+    assert(sorted.getSeq[Int](0) == Seq(1, 2, 3))
+    assert(sorted.getSeq[Int](1) == Seq(3, 2, 1))
+    assert(sorted.getSeq[Int](2) == Seq(1, 2, 3))
+    assert(sorted.getSeq[Int](3).sorted == Seq(1, 2, 3))
+    assert(sorted.getMap[String, String](4) == Map("k1" -> "v1", "k2" -> "v2"))
     // ksqlDB null contract: one NULL side returns the other; nulls sort
     // LAST in both directions
     val ac = spark.sql("SELECT " +
@@ -554,7 +565,7 @@ class KsqlSpec extends SparkSpec {
       + " AS rt").head()
     assert(er.getString(0) == "6869" && er.getString(1) == "spark")
     intercept[IllegalArgumentException] {
-      Translator.rewriteExpr("ENCODE(x, 'utf8', 'ebcdic')")
+      dialectRow("ENCODE(x, 'utf8', 'ebcdic')")
     }
     // execution: IS_JSON_STRING is false for NULL and malformed, true for valid
     val r = spark.sql("SELECT " +
@@ -719,7 +730,7 @@ class KsqlSpec extends SparkSpec {
     assert(row.getAs[Long]("ms") == 1704067200000L)
     // round trip: format(parse(x)) is identity in the same zone
     intercept[IllegalArgumentException] {
-      Translator.rewriteExpr("TIMESTAMPTOSTRING(1)")
+      dialectRow("TIMESTAMPTOSTRING(1)")
     }
   }
 
@@ -854,10 +865,12 @@ class KsqlSpec extends SparkSpec {
   }
 
   test("ELT / FIELD / CONCAT_WS rewrite and evaluate with ksqlDB semantics") {
-    assert(Translator.rewriteExpr("ELT(2, 'a', 'b')").startsWith("elt("))
-    assert(Translator.rewriteExpr("CONCAT_WS('-', a, b)").startsWith("concat_ws("))
-    val f = Translator.rewriteExpr("FIELD(seg, 'BUILDING', 'MACHINERY')")
-    assert(f.contains("CASE") && f.contains("ELSE 0"))
+    val v = dialectRowOver("SELECT 'ab' AS a, 'cd' AS b, 'MACHINERY' AS seg")(
+      "ELT(2, 'a', 'b')", "CONCAT_WS('-', a, b)",
+      "FIELD(seg, 'BUILDING', 'MACHINERY')")
+    assert(v.getString(0) == "b")
+    assert(v.getString(1) == "ab-cd")
+    assert(v.getInt(2) == 2)
     // evaluate through Spark: index is 1-based, 0 when absent
     val row = spark.sql(
       s"SELECT ${Translator.rewriteExpr("FIELD('MACHINERY', 'BUILDING', 'MACHINERY')")} AS i1, " +
@@ -875,7 +888,8 @@ class KsqlSpec extends SparkSpec {
     // when a literal containing the name precedes it
     val mixed = Translator.rewriteExpr("CONCAT('MASK(keep)', MASK(name))")
     assert(mixed.contains("'MASK(keep)'"))
-    assert(mixed.contains("regexp_replace"))
+    assert(dialectRow("CONCAT('MASK(keep)', MASK(name))").getString(0) ==
+      "MASK(keep)Xxn-x")
     // '' escape keeps quote parity intact across the scan
     assert(Translator.rewriteExpr("x = 'it''s MASK(y)'") == "x = 'it''s MASK(y)'")
   }
@@ -889,10 +903,10 @@ class KsqlSpec extends SparkSpec {
         |  MASK_KEEP_LEFT(c_name, 5) AS kl, MASK_KEEP_RIGHT(c_name, 4) AS kr
         |FROM customer""".stripMargin): @unchecked
     val direct = Tables.customer(spark, sfDir).select(col("c_custkey"),
-      KsqlFunctions.maskLeft(col("c_name"), 3).as("ml"),
-      KsqlFunctions.maskRight(col("c_name"), 3).as("mr"),
-      KsqlFunctions.maskKeepLeft(col("c_name"), 5).as("kl"),
-      KsqlFunctions.maskKeepRight(col("c_name"), 4).as("kr"))
+      KsqlFunctions.call("MASK_LEFT", col("c_name"), lit(3)).as("ml"),
+      KsqlFunctions.call("MASK_RIGHT", col("c_name"), lit(3)).as("mr"),
+      KsqlFunctions.call("MASK_KEEP_LEFT", col("c_name"), lit(5)).as("kl"),
+      KsqlFunctions.call("MASK_KEEP_RIGHT", col("c_name"), lit(4)).as("kr"))
     assert(df.exceptAll(direct).count() == 0 && direct.exceptAll(df).count() == 0)
   }
 
@@ -1239,16 +1253,17 @@ class KsqlSpec extends SparkSpec {
   }
 
   test("MASK variants accept nested calls and expression counts") {
-    val r = Translator.rewriteExpr("MASK_LEFT(UCASE(name), 3)")
-    assert(r.contains("upper(name)") && r.contains("regexp_replace")
-      && !r.toUpperCase.contains("MASK"))
-    val r2 = Translator.rewriteExpr("MASK_KEEP_RIGHT(CONCAT(a, b), LEN(a) - 1)")
-    assert(r2.contains("concat(a, b)") && !r2.toUpperCase.contains("MASK"))
-    // quote-aware scan: commas/parens inside string literals are opaque
-    val r3 = Translator.rewriteExpr("TIMESTAMPTOSTRING(ts, 'yyyy (MM,dd)')")
-    assert(r3.contains("date_format(timestamp_millis(ts), 'yyyy (MM,dd)')"))
+    val r = dialectRowOver(
+      "SELECT 'Ab1.x' AS name, 'ab' AS a, 'cd' AS b, 1704067200000L AS ts")(
+      "MASK_LEFT(UCASE(name), 3)",
+      "MASK_KEEP_RIGHT(CONCAT(a, b), LEN(a) - 1)",
+      // quote-aware scan: commas/parens inside string literals are opaque
+      "TIMESTAMPTOSTRING(ts, 'yyyy (MM,dd)')")
+    assert(r.getString(0) == "XXn.X")
+    assert(r.getString(1) == "xxxd")
+    assert(r.getString(2) == "2024 (01,01)")
     val e = intercept[IllegalArgumentException] {
-      Translator.rewriteExpr("MASK_LEFT(name)")
+      dialectRow("MASK_LEFT(name)")
     }
     assert(e.getMessage.contains("expects 2 arguments"))
   }

@@ -69,8 +69,15 @@ class OptimizationR17Spec extends SparkSpec {
     val native = whash.select(col("doc_id"),
       TextFunctions.simhash32("whash").as("s")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hof = whash.select(col("doc_id"),
-      TextFunctions.simhash32Hof("whash").as("s")).collect()
+    // reference HOF formulation: 32 interpreted passes over the array
+    val simhash32Hof = expr(
+      """aggregate(
+        |  transform(sequence(0, 31), i ->
+        |    IF(aggregate(whash, CAST(0 AS BIGINT),
+        |         (acc, h) -> acc + IF(shiftright(h, i) % 2 = 1, 1, -1)) > 0,
+        |       shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),
+        |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin)
+    val hof = whash.select(col("doc_id"), simhash32Hof.as("s")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native === hof)
   }
